@@ -132,11 +132,11 @@ class EsSinkBackend(transport: EsTransport,
       }
   }
 
-  /** K3: control-plane sized — the pattern list collects (it is the
-    * distinct drop set of one batch) and each index deletion is one
+  /** K3: control-plane sized — the pattern list collects (one batch's
+    * drops), dedups on the driver, and each index deletion is one
     * transport call, `prefix` kinds as a trailing-star expression. */
   override def dropIndexes(drops: DataFrame): Unit =
-    drops.select(col("kind"), col("pattern")).distinct().collect()
+    drops.select(col("kind"), col("pattern")).collect().distinct
       .foreach { r =>
         val p = r.getString(1)
         transport.deleteIndex(

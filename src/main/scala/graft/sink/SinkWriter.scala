@@ -1,11 +1,15 @@
 package graft.sink
 
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.slf4j.LoggerFactory
 
 import graft.config.GraftConfig
 import graft.operators.{DeleteStrategies, Quarantine, Routing, TimeMachine, Upsert}
@@ -144,6 +148,88 @@ object SinkWriter {
     else cfg.fileNamespaces.map(ns =>
       ns -> cfg.mappings.getOrElse(ns, ns.toLowerCase))
 
+  /** Releases that took [[release]]'s fallback branch: a materialized
+    * frame whose analyzed plan was not the checkpoint's `LogicalRDD`, so
+    * its blocks could not be unpersisted directly. Stays 0 on the
+    * supported Spark version; anything else is a per-batch block leak. */
+  val fallbackReleases = new AtomicLong(0L)
+
+  private lazy val log = LoggerFactory.getLogger(getClass)
+
+  /** Frees a frame materialized by `localCheckpoint` NOW. Dataset.unpersist
+    * is a cache-manager no-op for a checkpointed frame, so the backing
+    * RDD is unpersisted directly; without this a long-lived stream holds
+    * every batch's blocks until GC. A plan of any other shape is counted
+    * in [[fallbackReleases]] and logged before the best-effort unpersist. */
+  private def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case r: LogicalRDD => r.rdd.unpersist(false); ()
+    case other =>
+      fallbackReleases.incrementAndGet()
+      log.warn(s"graft.sink: batch materialization is a ${other.nodeName}, " +
+        "not a LogicalRDD; its blocks may outlive the batch")
+      df.unpersist(false); ()
+  }
+
+  /** Runs `body` with its Spark jobs described `graft.sink:<name>`, then
+    * restores the caller's description (a streaming batch's own label). */
+  private def layer[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft.sink:$name")
+    try body finally sc.setJobDescription(prior)
+  }
+
+  /** The batch's K3 drop list, as a local (kind ∈ exact|prefix, pattern)
+    * frame, and its in-batch drop fence, as a lower(namespace) → version
+    * map — both from ONE driver collect of two control-plane-sized sets:
+    * the drop ops and the batch's distinct (lower(namespace), lower(db))
+    * pairs. A namespace's fence is the highest version of a drop covering
+    * it: a `drop_coll` of that namespace, or a `drop_db` of a db it
+    * appears under in this batch. Patterns resolve through the same
+    * `[[mapping]]` table as data ops, so a mapped collection's drop deletes
+    * the index its documents actually landed in. */
+  private def dropsAndFence(b: DataFrame, cfg: GraftConfig)
+      : (DataFrame, Map[String, Long]) = {
+    val spark = b.sparkSession
+    val isColl = col("operation") === "drop_coll"
+    val rows =
+      if (!cfg.droppedCollections && !cfg.droppedDatabases) Seq.empty[Row]
+      else {
+        val drops = b.filter((isColl && lit(cfg.droppedCollections)) ||
+            (col("operation") === "drop_db" && lit(cfg.droppedDatabases)))
+          .select(isColl.as("coll"), lower(col("namespace")).as("ns"),
+            lower(col("db")).as("db"), col("version"),
+            when(isColl, Routing.resolveIndex(cfg.mappings)).as("ix"))
+        // pairs dedup per partition — a partial aggregate without its
+        // shuffle, so the collect stays ONE single-stage job; the driver
+        // merges at most (partitions × pairs) rows
+        val nsDb = b.select(lower(col("namespace")).as("ns"),
+          lower(col("db")).as("db"))
+        val pairs = nsDb.mapPartitions(_.toSet.iterator)(
+            Encoders.row(nsDb.schema))
+          .select(lit(null).cast("boolean").as("coll"), col("ns"),
+            col("db"), lit(null).cast("long").as("version"),
+            lit(null).cast("string").as("ix"))
+        drops.unionByName(pairs).collect().toSeq
+      }
+    val (dropped, seen) = rows.partition(!_.isNullAt(0))
+    val dropRows = dropped.map { d =>
+      if (d.getBoolean(0)) Row("exact", d.getString(4))
+      else Row("prefix", Option(d.getString(2)).map(_ + ".").orNull)
+    }
+    // covering is an equality match, so null names, dbs and versions
+    // never fence anything (the SQL-join semantics)
+    def covers(d: Row, p: Row) = !d.isNullAt(3) &&
+      (if (d.getBoolean(0)) p.getString(1) == d.getString(1)
+       else !p.isNullAt(2) && p.getString(2) == d.getString(2))
+    val fence = seen.filter(!_.isNullAt(1)).flatMap { p =>
+      dropped.filter(covers(_, p)).map(d => p.getString(1) -> d.getLong(3))
+    }.groupMapReduce(_._1)(_._2)(math.max)
+    (spark.createDataFrame(java.util.Arrays.asList(dropRows: _*),
+        StructType(Seq(StructField("kind", StringType),
+          StructField("pattern", StringType)))), fence)
+  }
+
   /** Apply one micro-batch of hot-path envelope ops to the backend.
     * `batch` is the (filtered, transformed) envelope — what
     * [[graft.config.ConfiguredPipeline.hotPath]] emits; meta columns are
@@ -155,30 +241,34 @@ object SinkWriter {
       if (batch.columns.contains("meta_index")) batch
       else Routing.withMeta(Routing.extractDocMeta(batch), cfg.mappings,
         quarantine = true)
-    // materialized for the batch only (streaming-twin contract): up to
-    // five consumers below, released before returning. localCheckpoint —
-    // not persist — because every downstream JOB (the pre-delete layer
-    // job, the delete resolution, a composite's follow-on reads) would
+    // Two materializations, both for this batch only (streaming-twin
+    // contract), each released through [[release]] by the `finally` of
+    // the `try` that opens right after it:
+    //  - `tagged`, the routed batch: read by the quarantine channel, K4
+    //    history, the drop/fence collect and the LWW pass;
+    //  - `winners`, the fenced last-writer-wins resolution: read by the
+    //    K1 upserts and the K2 delete resolution, so LWW and the fence
+    //    run once per batch instead of once per consumer.
+    // localCheckpoint — not persist — because every downstream JOB would
     // otherwise re-analyze and re-optimize the full envelope→route
-    // logical plan just to hit the cache at physical planning; the
-    // envelope's from_json + relate fan-out tree is large enough that
-    // driver planning, not executor work, dominated the measured wall
+    // logical plan (from_json + relate fan-out) just to hit the cache at
+    // physical planning, and driver planning dominated the measured wall
     // (q171/q91 stage probe: Σ task run-time ≈ 1.3 s of a 7.8 s wall).
     // Checkpointing truncates the plan to the materialized RDD for every
     // consumer (guide §7.3, the q189 remedy). Batch-sized, same contract.
-    val tagged = routed0.localCheckpoint(true)
-    // the rejects side output: every tagged op reaches the backend's
-    // quarantine channel (reject-sized frame); FATAL reasons (unkeyable
-    // id) then leave the sink-bound flow entirely — the reference skips
-    // them with an error log (monstache.go:3167-3171). A pre-routed
-    // batch without the tag column (a caller that ran withMeta in
-    // filter mode upstream) has nothing to report.
-    val hasTags = tagged.columns.contains(Quarantine.ReasonCol)
-    val b =
-      if (!hasTags) tagged
-      else tagged.filter(Quarantine.keep(col(Quarantine.ReasonCol)))
-        .drop(Quarantine.ReasonCol)
+    val tagged = layer(spark, "route")(routed0.localCheckpoint(true))
     try {
+      // the rejects side output: every tagged op reaches the backend's
+      // quarantine channel (reject-sized frame); FATAL reasons (unkeyable
+      // id) then leave the sink-bound flow entirely — the reference skips
+      // them with an error log (monstache.go:3167-3171). A pre-routed
+      // batch without the tag column (a caller that ran withMeta in
+      // filter mode upstream) has nothing to report.
+      val hasTags = tagged.columns.contains(Quarantine.ReasonCol)
+      val b =
+        if (!hasTags) tagged
+        else tagged.filter(Quarantine.keep(col(Quarantine.ReasonCol)))
+          .drop(Quarantine.ReasonCol)
       // the pre-delete layer frames, in replay order: quarantine rows
       // (every tagged op reaches the channel), K4 history (every version
       // appends, before dedup/fences and before the strategy-2 delete
@@ -207,88 +297,64 @@ object SinkWriter {
       val ops = if (cfg.deleteStrategy == 2) DeleteStrategies.ignore(b)
                 else b
 
-      // K3 drops: control-plane sized; patterns resolve through the same
-      // [[mapping]] table as data ops so a mapped collection's drop
-      // deletes the index its documents actually landed in
-      val dropOps = b.filter(
-        (col("operation") === "drop_coll" && lit(cfg.droppedCollections)) ||
-          (col("operation") === "drop_db" && lit(cfg.droppedDatabases)))
-      val drops = dropOps.select(col("operation").as("d_op"),
-        lower(col("namespace")).as("d_ns"), lower(col("db")).as("d_db"),
-        col("version").as("d_version"),
-        when(col("operation") === "drop_coll",
-          Routing.resolveIndex(cfg.mappings)).as("d_index"))
-      val dropRows = drops.select(
-        when(col("d_op") === "drop_coll", "exact").otherwise("prefix")
-          .as("kind"),
-        when(col("d_op") === "drop_coll", col("d_index"))
-          .otherwise(concat(col("d_db"), lit(".")))
-          .as("pattern"))
-
-      // in-batch drop fence: data ops at or below their namespace's last
-      // covering drop were wiped before they could land
-      val nsFence = b.select(lower(col("namespace")).as("ix"),
-          lower(col("db")).as("ix_db")).distinct()
-        .join(broadcast(drops),
-          (col("d_op") === "drop_coll" && col("ix") === col("d_ns")) ||
-            (col("d_op") === "drop_db" && col("ix_db") === col("d_db")),
-          "left")
-        .groupBy("ix").agg(max(col("d_version")).as("fence_v"))
-      def fenced(df: DataFrame): DataFrame =
-        df.join(broadcast(nsFence), lower(col("namespace")) === col("ix"),
-            "left")
-          .filter(col("fence_v").isNull || col("version") > col("fence_v"))
-          .drop("ix", "fence_v")
-
-      // K1 bulk upsert: the batch's LWW winners that outlive any drop.
-      // One backend call applies quarantine + history + drops + upserts
-      // in replay order; deletes follow below (they read the POST-upsert
-      // sink state).
-      backend.applyPreDelete(quarRows, histRows, dropRows,
-        fenced(Upsert.liveDocuments(ops)))
-
-      // K2 deletes, resolved per configured strategy against the
-      // POST-upsert sink state, normalized to (id, del_index,
-      // del_routing, del_version) — the tombstone's own version rides
-      // along so the backend can enforce the versioned-delete fence
-      val tombs = fenced(Upsert.tombstones(ops))
-      cfg.deleteStrategy match {
-        case 2 => // ignore: deletes are dropped (monstache.go:4068-4070)
-        case 1 =>
-          // stateful resolution against the backend's saved coordinates,
-          // used EXACTLY as stored (lowercaseSavedIndex = false): the
-          // key the upsert created is authoritative for a pluggable
-          // backend, where the reference's getIndexMeta lowercasing —
-          // a no-op against ES — would make a mixed-case [[mapping]]
-          // index undeletable.
-          val metaStore = backend.sinkState(spark)
-            .select(col("namespace"), col("id"),
-              col("meta_index").as("saved_index"),
-              col("meta_routing").as("saved_routing"))
-          backend.delete(DeleteStrategies.stateful(
-              tombs.select(col("namespace"), col("id"), col("version")),
-              metaStore, lowercaseSavedIndex = false)
-            .select(col("id"), col("meta_index").as("del_index"),
-              col("meta_routing").as("del_routing"),
-              col("version").as("del_version")))
-        case _ =>
-          val resolved = DeleteStrategies.statelessRouted(
-            tombs.drop("meta_index", "meta_routing"),
-            backend.sinkState(spark),
-            deleteProtection = !cfg.disableDeleteProtection)
-          backend.delete(resolved.filter(col("status") === "deleted")
-            .select(col("id"), col("hit_index").as("del_index"),
-              col("hit_routing").as("del_routing"),
-              col("version").as("del_version")))
+      // in-batch drop fence: data winners at or below their namespace's
+      // last covering drop were wiped before they could land. The fence
+      // is a driver literal, so applying it is a filter, not a join.
+      val (dropRows, winners) = layer(spark, "winners") {
+        val (drops, fence) = dropsAndFence(b, cfg)
+        val lww = Upsert.lastWriterWins(ops)
+        val outlived =
+          if (fence.isEmpty) lww
+          else {
+            val fenceV = element_at(typedLit(fence), lower(col("namespace")))
+            lww.filter(fenceV.isNull || col("version") > fenceV)
+          }
+        (drops, outlived.filter(col("operation").isin("i", "u", "d"))
+          .localCheckpoint(true))
       }
-    } finally tagged.queryExecution.analyzed match {
-      // release the checkpoint's backing blocks NOW (Dataset.unpersist is
-      // a cache-manager no-op for a checkpointed frame; without this a
-      // long-lived stream would hold every batch's blocks until GC)
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(false); ()
-      case _ => tagged.unpersist(false); ()
-    }
+      try {
+        // K1 bulk upsert: the batch's live winners. One backend call
+        // applies quarantine + history + drops + upserts in replay order;
+        // deletes follow below (they read the POST-upsert sink state).
+        layer(spark, "pre_delete")(backend.applyPreDelete(quarRows,
+          histRows, dropRows, winners.filter(col("operation").isin("i", "u"))))
+
+        // K2 deletes, resolved per configured strategy against the
+        // POST-upsert sink state, normalized to (id, del_index,
+        // del_routing, del_version) — the tombstone's own version rides
+        // along so the backend can enforce the versioned-delete fence
+        val tombs = winners.filter(col("operation") === "d")
+        layer(spark, "delete")(cfg.deleteStrategy match {
+          case 2 => // ignore: deletes are dropped (monstache.go:4068-4070)
+          case 1 =>
+            // stateful resolution against the backend's saved
+            // coordinates, used EXACTLY as stored (lowercaseSavedIndex =
+            // false): the key the upsert created is authoritative for a
+            // pluggable backend, where the reference's getIndexMeta
+            // lowercasing — a no-op against ES — would make a mixed-case
+            // [[mapping]] index undeletable.
+            val metaStore = backend.sinkState(spark)
+              .select(col("namespace"), col("id"),
+                col("meta_index").as("saved_index"),
+                col("meta_routing").as("saved_routing"))
+            backend.delete(DeleteStrategies.stateful(
+                tombs.select(col("namespace"), col("id"), col("version")),
+                metaStore, lowercaseSavedIndex = false)
+              .select(col("id"), col("meta_index").as("del_index"),
+                col("meta_routing").as("del_routing"),
+                col("version").as("del_version")))
+          case _ =>
+            val resolved = DeleteStrategies.statelessRouted(
+              tombs.drop("meta_index", "meta_routing"),
+              backend.sinkState(spark),
+              deleteProtection = !cfg.disableDeleteProtection)
+            backend.delete(resolved.filter(col("status") === "deleted")
+              .select(col("id"), col("hit_index").as("del_index"),
+                col("hit_routing").as("del_routing"),
+                col("version").as("del_version")))
+        })
+      } finally release(winners)
+    } finally release(tagged)
   }
 
   /** Continuous form: envelope stream → optional transform → the batch

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -215,6 +216,146 @@ class SinkWriterSpec extends AnyFunSuite {
     SinkWriter.writeBatch(Seq(ev(1, "5", "app.t0", "d", 20)).toDF(),
       GraftConfig(deleteStrategy = 1), backend)
     assert(backend.state.isEmpty)
+  }
+
+  test("drop fence: interleaved drops, a mapped namespace, each strategy") {
+    import spark.implicits._
+    val cfgF = GraftConfig(
+      mappings = Map("app.t1" -> "custom_t1", "app.t2" -> "custom_t2"))
+    // seed batch (no drops): what the drops and deletes below act on
+    val seed = Seq(
+      ev(0, "1", "app.t0", "i", 1), ev(1, "2", "app.t0", "i", 2),
+      ev(2, "3", "app.t1", "i", 3), ev(3, "4", "app.t1", "i", 4),
+      ev(4, "5", "other.t0", "i", 5), ev(5, "6", "other.t0", "i", 6),
+      ev(6, "7", "app.t2", "i", 7), ev(7, "13", "other.t0", "i", 8))
+    // one batch, in version order. Fences: app.t0 and app.t2 at 50 (the
+    // drop_db covers db app; drop_coll app.t0 at 30 is below it), app.t1
+    // at 70 (its own drop_coll outranks the drop_db), other.t0 none.
+    val drops = Seq(
+      ev(10, "1", "app.t0", "u", 10),   // fenced
+      ev(11, "3", "app.t1", "d", 11),   // fenced
+      ev(12, "5", "other.t0", "d", 12), // unfenced delete
+      ev(13, "7", "app.t2", "u", 13),   // fenced
+      drop(30, "app.t0", "drop_coll", 30),
+      ev(31, "8", "app.t0", "i", 31),   // fenced
+      ev(32, "13", "app.t0", "d", 32),  // fenced: spares other.t0/13
+      drop(50, "app", "drop_db", 50),
+      ev(51, "9", "app.t0", "i", 51),   // lands
+      ev(52, "4", "app.t1", "u", 52),   // fenced
+      ev(53, "6", "app.t0", "d", 53),   // outlives the fence
+      drop(70, "app.t1", "drop_coll", 70),
+      ev(71, "10", "app.t1", "i", 71),  // lands in custom_t1
+      ev(72, "11", "app.t2", "i", 72),  // lands in custom_t2
+      ev(74, "9", "other.t0", "d", 74)) // outlives: no other.t0 fence
+    // a later batch without drops: nothing is fenced
+    val noDrops = Seq(
+      ev(80, "9", "app.t0", "u", 80),
+      ev(81, "7", "app.t2", "d", 81),
+      ev(82, "12", "app.t1", "i", 82))
+    def run(strategy: Int): Seq[Map[(String, String), Long]] = {
+      val backend = new InMemorySinkBackend
+      val c = cfgF.copy(deleteStrategy = strategy)
+      Seq(seed, drops, noDrops).map { batch =>
+        SinkWriter.writeBatch(batch.toDF(), c, backend)
+        backend.state.map { case (k, d) => k -> d.version }.toMap
+      }
+    }
+    // the seed batch, under every strategy
+    val seeded = Map(("app.t0", "1") -> 1L, ("app.t0", "2") -> 2L,
+      ("custom_t1", "3") -> 3L, ("custom_t1", "4") -> 4L,
+      ("other.t0", "5") -> 5L, ("other.t0", "6") -> 6L,
+      ("custom_t2", "7") -> 7L, ("other.t0", "13") -> 8L)
+    // after the drop batch, every strategy: drop_coll app.t0 wiped
+    // app.t0; drop_coll app.t1 wiped custom_t1; the drop_db's "app."
+    // prefix never reaches custom_t2, yet its fence still held the
+    // v13 update of custom_t2/7 back (the open mapped-index finding,
+    // pinned as it stands)
+    val landed = Map(("app.t0", "9") -> 51L, ("custom_t1", "10") -> 71L,
+      ("custom_t2", "7") -> 7L, ("custom_t2", "11") -> 72L,
+      ("other.t0", "13") -> 8L)
+
+    // stateless with protection: each surviving tombstone's id has ONE
+    // hit, whatever its namespace — other.t0/5 (its own doc), other.t0/6
+    // (the app.t0 delete's only same-id hit) and app.t0/9 (upserted in
+    // this batch, so the delete reads the post-upsert state)
+    assert(run(0) == Seq(seeded,
+      landed - (("app.t0", "9")),
+      landed - (("app.t0", "9")) - (("custom_t2", "7")) ++ Map(
+        ("app.t0", "9") -> 80L, ("custom_t1", "12") -> 82L)))
+    // stateful: tombstones resolve to their own namespace's saved
+    // coordinates only, so just other.t0/5 goes (and custom_t2/7 in the
+    // no-drop batch, through its saved mapped index)
+    assert(run(1) == Seq(seeded,
+      landed + (("other.t0", "6") -> 6L),
+      landed - (("custom_t2", "7")) ++ Map(("other.t0", "6") -> 6L,
+        ("app.t0", "9") -> 80L, ("custom_t1", "12") -> 82L)))
+    // ignore: no delete ever applies
+    val kept = landed ++ Map(("other.t0", "5") -> 5L, ("other.t0", "6") -> 6L)
+    assert(run(2) == Seq(seeded, kept,
+      kept ++ Map(("app.t0", "9") -> 80L, ("custom_t1", "12") -> 82L)))
+  }
+
+  test("a failing backend call leaves none of the batch's blocks behind") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val failing = new InMemorySinkBackend {
+      override def applyPreDelete(
+          quarantineRows: Option[DataFrame], history: Option[DataFrame],
+          drops: DataFrame, upserts: DataFrame): Unit =
+        throw new IllegalStateException("bulk request refused")
+    }
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    val err = intercept[IllegalStateException] {
+      SinkWriter.writeBatch(Seq(
+        ev(0, "1", "app.t0", "i", 10),
+        ev(1, "2", "app.t0", "d", 11)).toDF(), cfg, failing)
+    }
+    assert(err.getMessage == "bulk request refused")
+    val left = sc.getRDDStorageInfo.filterNot(r => before(r.id))
+    assert(left.isEmpty, s"blocks left: ${left.mkString(", ")}")
+  }
+
+  test("both batch materializations release through the LogicalRDD branch") {
+    import spark.implicits._
+    SinkWriter.writeBatch(Seq(
+      ev(0, "1", "app.t0", "i", 10),
+      drop(1, "app.t1", "drop_coll", 11)).toDF(), cfg,
+      new InMemorySinkBackend)
+    assert(SinkWriter.fallbackReleases.get == 0)
+  }
+
+  test("each writeBatch layer labels its jobs and restores the caller's") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description")))
+          .foreach(labels.add)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      SinkWriter.writeBatch(Seq(
+        ev(0, "1", "app.t0", "i", 10),
+        ev(1, "2", "app.t0", "i", 11),
+        drop(2, "app.t1", "drop_coll", 12),
+        ev(3, "2", "app.t0", "d", 13)).toDF(), cfg, new InMemorySinkBackend)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      val expected = Set("route", "winners", "pre_delete", "delete")
+        .map("graft.sink:" + _)
+      // listener events arrive asynchronously
+      def seen = labels.toArray(new Array[String](0)).toSet
+      val deadline = System.nanoTime() + 10000000000L
+      while (!expected.subsetOf(seen) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(expected.subsetOf(seen), s"job labels seen: $seen")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("startSink runs the config-driven hot path into the backend") {

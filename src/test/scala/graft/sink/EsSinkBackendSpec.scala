@@ -168,13 +168,15 @@ class EsSinkBackendSpec extends AnyFunSuite {
 
   test("K3 drops: exact pattern verbatim, prefix gets the star") {
     val key = "es-drop"; EsMock.reset(key)
+    // one batch's drop list repeats a pattern per drop op
     val drops = spark.createDataFrame(
-      java.util.Arrays.asList(Row("exact", "parts_idx"), Row("prefix", "app.")),
+      java.util.Arrays.asList(Row("exact", "parts_idx"), Row("prefix", "app."),
+        Row("exact", "parts_idx")),
       StructType(Seq(StructField("kind", StringType),
         StructField("pattern", StringType))))
     backend(key).dropIndexes(drops)
-    assert(EsMock.q(EsMock.indexDrops, key).asScala.toSet ==
-      Set("parts_idx", "app.*"))
+    assert(EsMock.q(EsMock.indexDrops, key).asScala.toSeq.sorted ==
+      Seq("app.*", "parts_idx"))
   }
 
   test("K4 history ids are deterministic source_id@version (replay-safe)") {
