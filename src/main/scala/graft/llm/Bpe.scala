@@ -89,14 +89,14 @@ object Bpe {
     * (the tokenizer artifact a pipeline ships) and the final
     * segmentation frame (w, n, syms). Stops early if no adjacent pair
     * remains (every word fused to one symbol). Each round's rewritten
-    * frame is localCheckpoint-ed: the rewrite chain would otherwise
-    * accrete one UDF stage of lineage per round, and the frame is
-    * vocabulary-sized — eager materialization is the cheap side of that
-    * trade. */
+    * frame is an eager [[graft.CacheBarriers.truncate]]: the rewrite chain
+    * would otherwise accrete one UDF stage of lineage per round, and the
+    * frame is vocabulary-sized. The superseded round is released at once,
+    * so one round's blocks are live at a time. */
   def train(census: DataFrame, nMerges: Int): (Seq[BpeMerge], DataFrame) = {
     require(nMerges >= 1 && nMerges <= 10000,
       s"nMerges=$nMerges out of range")
-    var syms = initSyms(census).localCheckpoint(true)
+    var syms = graft.CacheBarriers.truncate(initSyms(census), eager = true)
     val merges = scala.collection.mutable.ArrayBuffer[BpeMerge]()
     var r = 1
     var exhausted = false
@@ -109,9 +109,10 @@ object Bpe {
         val (a, b, n) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += BpeMerge(r, a, b, n)
-        syms = syms.select(col("w"), col("n"),
-          applyMergeU(col("syms"), lit(a), lit(b)).as("syms"))
-          .localCheckpoint(true)
+        val prev = syms
+        syms = graft.CacheBarriers.truncate(syms.select(col("w"), col("n"),
+          applyMergeU(col("syms"), lit(a), lit(b)).as("syms")), eager = true)
+        graft.CacheBarriers.release(prev)
         r += 1
       }
     }

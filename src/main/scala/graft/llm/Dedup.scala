@@ -12,16 +12,12 @@ import TextHash._
   * under AQE because band keys are md5-uniform); verification joins only
   * within buckets.
   *
-  * Caching contract: the pair generators persist their signature /
-  * fingerprint frames (the materialization barrier their own doc
-  * comments justify) and the returned frame lazily depends on that
-  * cache, so it cannot be unpersisted inside the call. Internal barriers
-  * register with [[graft.CacheBarriers]] — long-lived sessions release
-  * them with `CacheBarriers.releaseAll()` after consuming each round's
-  * results (or persist the signature table to storage and use the
-  * incremental path). Barriers RETURNED to the caller ([[signEval]],
-  * [[signCorpus]]) are deliberately not registered: their release belongs
-  * to the caller (the streaming twins unpersist per batch).
+  * Caching contract: every intermediate an operator here materializes
+  * for itself (signature barriers, the cluster rounds' truncations) is
+  * registered with [[graft.CacheBarriers]] and released by its rule, so
+  * the returned lazy frame must be consumed inside the caller's scope.
+  * Frames RETURNED to the caller ([[signEval]], [[signCorpus]]) are not
+  * registered: their release belongs to the caller.
   */
 object Dedup {
 
@@ -661,17 +657,16 @@ object Dedup {
     * the (small) pair set, not the corpus; the driver-side loop carries
     * only a changed-row count per round. */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // localCheckpoint (eager) after every round: iterative self-joins
-    // compound the logical plan exponentially without a lineage cut —
-    // the planner, not the data, is what blows up. On a cluster with
-    // lineage-durability requirements this becomes checkpoint() into the
-    // checkpoint dir; the algorithm is unchanged.
-    // materialize pairs BEFORE the symmetric union — both union branches
-    // would otherwise re-run the whole LSH candidate/verification lineage.
-    // Only the pairs are eagerly checkpointed: the symmetric union on top
-    // is a narrow read of the materialized RDD, cheap to recompute each
-    // round, so its own checkpoint would buy nothing but an extra job.
-    val p = pairs.localCheckpoint(true)
+    // a truncation after every round: iterative self-joins compound the
+    // logical plan exponentially without a lineage cut — the planner, not
+    // the data, is what blows up. Each round's predecessor is released as
+    // soon as the round is materialized, so one round is live at a time.
+    // pairs are truncated BEFORE the symmetric union — both union
+    // branches would otherwise re-run the whole LSH candidate/verification
+    // lineage. The union on top is a narrow read of the materialized RDD,
+    // cheap to recompute each round, so truncating it would buy nothing
+    // but an extra job.
+    val p = graft.CacheBarriers.truncate(pairs, eager = true)
     val edges = p
       .select(col("id_a").as("a"), col("id_b").as("b"))
       .unionByName(p.select(col("id_b").as("a"), col("id_a").as("b")))
@@ -679,9 +674,8 @@ object Dedup {
     // for free inside the init aggregation; star-shaped dup clusters (the
     // common case) converge immediately and pay only the confirm round.
     // Lazy checkpoint: round 1's convergence aggregate materializes it.
-    var labels = edges.groupBy(col("a").as("n"))
-      .agg(least(col("a"), min(col("b"))).as("lbl"))
-      .localCheckpoint(false)
+    var labels = graft.CacheBarriers.truncate(edges.groupBy(col("a").as("n"))
+      .agg(least(col("a"), min(col("b"))).as("lbl")), eager = false)
     var iter = 0
     var converged = false
     // labels are monotone non-increasing, so the label sum strictly
@@ -697,13 +691,13 @@ object Dedup {
       val nbrMin = edges
         .join(labels.withColumnRenamed("n", "bn"), col("b") === col("bn"))
         .groupBy(col("a").as("n")).agg(min("lbl").as("nbl"))
-      // lazy checkpoint: the convergence aggregate below is the action
+      // lazy truncation: the convergence aggregate below is the action
       // that materializes it — one job per round instead of two
-      val next = labels
+      val next = graft.CacheBarriers.truncate(labels
         .join(nbrMin.withColumnRenamed("n", "n2"), col("n") === col("n2"), "left")
         .select(col("n"),
-          least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl"))
-        .localCheckpoint(false)
+          least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl")),
+        eager = false)
       // coalesce: an EMPTY pair set sums to NULL, which is still a valid
       // (immediately-converging) fixpoint, not a driver NPE
       val nextSum = Some(next
@@ -712,9 +706,11 @@ object Dedup {
         .head().getDecimal(0))
       converged = nextSum == lblSum
       lblSum = nextSum
+      graft.CacheBarriers.release(labels)
       labels = next
       iter += 1
     }
+    graft.CacheBarriers.release(p)
     // a silent partial closure would emit multiple cluster_ids (and
     // multiple representatives) for one true component — wrong keep/drop
     // decisions with no signal. Deep chains are rare (dup clusters are

@@ -69,10 +69,7 @@ object LangModel {
     // persisted: the unigram lineage is consumed TWICE (the vocab_v
     // aggregate and the scoring join) — unpersisted, a freshly-trained
     // model would re-run the whole reference-corpus aggregation for the
-    // row count. Same caching contract as Dedup's signature barrier;
-    // registered with CacheBarriers so sessions can release it (and since
-    // `persist` keys on the logical plan, the caller's own
-    // `unigrams.unpersist()` also works once scoring has run).
+    // row count. Same caching contract as Dedup's signature barrier.
     val uni = graft.CacheBarriers.barrier(unigrams)
     val v = uni.agg(count(lit(1)).as("vocab_v"))
     val exploded = docs

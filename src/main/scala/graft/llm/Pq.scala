@@ -395,13 +395,13 @@ object Pq {
     val coarse = readCoarse(spark, dir)
     val cb = readCodebook(spark, dir)
     val fresh = newVectors.join(known, Seq(idCol), "left_anti")
-    val codes = encode(residualFrame(fresh, coarse, idCol, vecCol), cb,
-        idCol, "rv", carry = Seq("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.CacheBarriers.withScope {
+      val codes = graft.CacheBarriers.barrier(encode(
+        residualFrame(fresh, coarse, idCol, vecCol), cb, idCol, "rv",
+        carry = Seq("bucket")))
       codes.write.mode("append").partitionBy("bucket").parquet(dir)
       codes.select(col(idCol)).write.mode("append").parquet(ids)
-    } finally codes.unpersist(false)
+    }
   }
 
   /** Probe the persisted index for a query frame (idCol, vecCol): only

@@ -161,36 +161,36 @@ object Sampling {
       s"temperature alpha must be in [0, 1] (got $alpha): 1 = identity " +
         "mix, 0 = uniform strata; upsampling (alpha > 1) is not " +
         "realizable by downsampling")
-    // persisted only WITHIN the call: the counts lineage is consumed
-    // twice (the rate rows and the global min) — unpersisted, the corpus
-    // would be SCANNED twice just to build a strata-sized table. The rate
-    // table itself is strata-cardinality (config-sized: languages,
-    // sources), so it is materialized to a LOCAL relation eagerly and the
-    // barrier released before returning — no cache outlives the call,
-    // and the local frame is exactly what temperatureMixWith broadcasts.
-    val counts = docs.filter(col(strataCol).isNotNull)
-      .groupBy(strataCol).agg(fcount(lit(1)).as("n_docs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nMin = counts.agg(min(col("n_docs")).as("n_min"))
-    val ratio = col("n_min").cast("double") / col("n_docs")
-    val power =
-      if (alpha == 0.5) sqrt(ratio) else pow(ratio, lit(1.0 - alpha))
-    val rates = counts.crossJoin(broadcast(nMin))
-      .withColumn("keep_permicro",
-        floor(lit(1e6) * power).cast("long"))
-      .drop("n_min")
-    // limit+1 bounds what can ever reach the driver; the require turns
-    // "mis-configured stratum column" into a loud error instead of an OOM
-    val rows =
-      try rates.limit(maxStrata + 1).collect()
-      finally counts.unpersist(false)
-    require(rows.length <= maxStrata,
-      s"temperatureRates: over $maxStrata distinct '$strataCol' strata — " +
-        "strata must be config-cardinality (languages, sources); a " +
-        "data-cardinality column cannot be temperature-mixed (raise " +
-        "maxStrata only if the rate table genuinely fits the driver)")
-    docs.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), rates.schema)
+    // a barrier scoped to the call: the counts lineage is consumed twice
+    // (the rate rows and the global min) — without it the corpus would be
+    // SCANNED twice just to build a strata-sized table. The rate table
+    // itself is strata-cardinality (config-sized: languages, sources), so
+    // it is collected to a LOCAL relation before the scope exits — no
+    // cache outlives the call, and the local frame is exactly what
+    // temperatureMixWith broadcasts.
+    graft.CacheBarriers.withScope {
+      val counts = graft.CacheBarriers.barrier(
+        docs.filter(col(strataCol).isNotNull)
+          .groupBy(strataCol).agg(fcount(lit(1)).as("n_docs")))
+      val nMin = counts.agg(min(col("n_docs")).as("n_min"))
+      val ratio = col("n_min").cast("double") / col("n_docs")
+      val power =
+        if (alpha == 0.5) sqrt(ratio) else pow(ratio, lit(1.0 - alpha))
+      val rates = counts.crossJoin(broadcast(nMin))
+        .withColumn("keep_permicro",
+          floor(lit(1e6) * power).cast("long"))
+        .drop("n_min")
+      // limit+1 bounds what can ever reach the driver; the require turns
+      // "mis-configured stratum column" into a loud error, not an OOM
+      val rows = rates.limit(maxStrata + 1).collect()
+      require(rows.length <= maxStrata,
+        s"temperatureRates: over $maxStrata distinct '$strataCol' strata — " +
+          "strata must be config-cardinality (languages, sources); a " +
+          "data-cardinality column cannot be temperature-mixed (raise " +
+          "maxStrata only if the rate table genuinely fits the driver)")
+      docs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), rates.schema)
+    }
   }
 
   /** Apply a (frozen) rate table to a corpus: keep a row when its salted

@@ -569,10 +569,10 @@ object Similarity {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
     val centroids =
       collectCentroids(embeddings.filter(centroidPred), idCol, vecCol)
-    // assignment persisted: stage 1 scans it quantized, stage 2 joins the
+    // assignment barrier: stage 1 scans it quantized, stage 2 joins the
     // survivors back against its exact vectors — one scan, two readers
-    val assigned = ivfAssign(embeddings, centroids, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assigned = graft.CacheBarriers.barrier(
+      ivfAssign(embeddings, centroids, idCol, vecCol))
     val quant = Quantize.withQuantized(
         assigned.select(col(idCol).as("neighbor_id"), col("v"), col("bucket")),
         vecCol = "v")
@@ -1597,21 +1597,15 @@ object Similarity {
     * scans never see it. */
   def writeIndex(assigned: DataFrame, dir: String,
                  idCol: String = "vec_id"): Unit = {
-    // persisted for THIS call only: the data write and the manifest
-    // write both consume the assignment (without the barrier the argmax
-    // re-runs per write), and both consumers complete before return —
-    // so the cache is released here, not parked in a registry. A frame
-    // the CALLER already persisted is left exactly as it was: yanking
-    // it would silently deoptimize every post-call consumer.
-    val callerCached =
-      assigned.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    if (!callerCached)
-      assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // a barrier scoped to THIS call: the data write and the manifest
+    // write both consume the assignment (without it the argmax re-runs
+    // per write), and both complete before return
+    graft.CacheBarriers.withScope {
+      graft.CacheBarriers.barrier(assigned)
       assigned.write.mode("overwrite").partitionBy("bucket").parquet(dir)
       assigned.select(col(idCol), col("bucket").cast("long").as("bucket"))
         .write.mode("overwrite").parquet(idsDir(dir))
-    } finally if (!callerCached) assigned.unpersist(false)
+    }
   }
 
   private def idsDir(dir: String) = s"$dir/_ids"
@@ -1770,17 +1764,16 @@ object Similarity {
     val spark = newVectors.sparkSession
     ensureIdManifest(spark, dir, idCol)
     val known = spark.read.parquet(idsDir(dir)).select(col(idCol))
-    // persisted for THIS call only (both writes consume it) — released
-    // before return, same contract as writeIndex
-    val assigned = ivfAssign(
-      newVectors.join(known, Seq(idCol), "left_anti"),
-      readCentroids(spark, dir), idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // a barrier scoped to THIS call (both writes consume it), same
+    // contract as writeIndex
+    graft.CacheBarriers.withScope {
+      val assigned = graft.CacheBarriers.barrier(ivfAssign(
+        newVectors.join(known, Seq(idCol), "left_anti"),
+        readCentroids(spark, dir), idCol, vecCol))
       assigned.write.mode("append").partitionBy("bucket").parquet(dir)
       assigned.select(col(idCol), col("bucket").cast("long").as("bucket"))
         .write.mode("append").parquet(idsDir(dir))
-    } finally assigned.unpersist(false)
+    }
   }
 
   // ── DuckDB twins ──────────────────────────────────────────────────────

@@ -103,11 +103,12 @@ object WordPiece {
   /** Train `nMerges` likelihood-picked rounds from a word census
     * (PRE-[[trainCensus]]; the bound is applied here). Returns the
     * merge table and the final segmentation frame. Same
-    * localCheckpoint-per-round lineage discipline as [[Bpe.train]]. */
+    * truncate-per-round lineage discipline as [[Bpe.train]]. */
   def train(census: DataFrame, nMerges: Int): (Seq[WpMerge], DataFrame) = {
     require(nMerges >= 1 && nMerges <= 10000,
       s"nMerges=$nMerges out of range")
-    var syms = initSyms(trainCensus(census)).localCheckpoint(true)
+    var syms = graft.CacheBarriers.truncate(initSyms(trainCensus(census)),
+      eager = true)
     val merges = scala.collection.mutable.ArrayBuffer[WpMerge]()
     var r = 1
     var exhausted = false
@@ -125,9 +126,10 @@ object WordPiece {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
         merges += WpMerge(r, a, b, a + stripCont(b),
           top(0).getLong(2), top(0).getLong(3))
-        syms = syms.select(col("w"), col("n"),
-          applyMergeU(col("syms"), lit(a), lit(b)).as("syms"))
-          .localCheckpoint(true)
+        val prev = syms
+        syms = graft.CacheBarriers.truncate(syms.select(col("w"), col("n"),
+          applyMergeU(col("syms"), lit(a), lit(b)).as("syms")), eager = true)
+        graft.CacheBarriers.release(prev)
         r += 1
       }
     }

@@ -139,20 +139,17 @@ case class TransformRegistry(
     * default whenever more than one mapper would re-scan. Set it false
     * at cluster scale when storage is namespace-partitioned (each
     * branch's filter then prunes to its own partitions and the re-scans
-    * are already minimal); localCheckpoint is the local/hot-cache
-    * variant of that trade. */
+    * are already minimal). */
   def apply(df: DataFrame, materializeInput: Boolean = true): DataFrame = {
     val filtered = applyFilters(df)
-    // streaming frames cannot be checkpointed at plan-construction time
-    // (and each micro-batch is already materialized once by the engine),
-    // so the barrier applies to batch inputs only. LAZY checkpoint: the
-    // barrier materializes on the first action and is reused by the rest
-    // — eager would run a full Spark job right here, during what callers
-    // reasonably treat as pure plan construction (explain, branching)
-    // even a single mapper forks the input into hit/miss (and part/rest)
-    // branches, so the barrier pays for itself from the first mapper on
+    // a lazy truncation, registered with the caller's scope: it
+    // materializes on the first action and the other branches reuse it —
+    // eager would run a Spark job during what callers treat as plan
+    // construction. Even one mapper forks the input into hit/miss
+    // branches. Streaming frames cannot be truncated at plan time (each
+    // micro-batch is already materialized once by the engine).
     val in = if (materializeInput && !df.isStreaming && mappers.nonEmpty)
-      filtered.localCheckpoint(false) else filtered
+      graft.CacheBarriers.truncate(filtered, eager = false) else filtered
     finalizeOps(applyMappers(in))
   }
 }

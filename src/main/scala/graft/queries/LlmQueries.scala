@@ -555,6 +555,12 @@ object LlmQueries extends QueryFamily {
                      df: org.apache.spark.sql.DataFrame) =
     df.repartition(s.sparkContext.defaultParallelism)
 
+  /** The spread embeddings table as one truncation, for the iterative
+    * (Lloyd's, codebook) queries that read it once per round. */
+  private def truncatedEmbeddings(s: org.apache.spark.sql.SparkSession,
+                                  dir: String) = graft.CacheBarriers.truncate(
+    spread(s, s.read.parquet(s"$dir/embeddings.parquet")), eager = true)
+
   /** DuckDB words list for a text expression. */
   private def W(e: String) = TextHash.sqlWords(e)
 
@@ -1310,8 +1316,7 @@ object LlmQueries extends QueryFamily {
         // assignment + balance) — without the lineage cut every pass would
         // re-scan and re-repartition the source (see Dedup.dupClusters for
         // the same iterative-loop barrier)
-        val e = spread(s, s.read.parquet(s"$dir/embeddings.parquet"))
-          .localCheckpoint(true)
+        val e = truncatedEmbeddings(s, dir)
         val trained = IvfTrain.train(e, col("vec_id") % 64 === 0, 2,
           "vec_id", "embedding")
         IvfTrain.balance(e, trained)
@@ -1336,8 +1341,7 @@ object LlmQueries extends QueryFamily {
     QueryDef.sorted(
       "q59_ann_trained",
       (s, dir) => {
-        val e = spread(s, s.read.parquet(s"$dir/embeddings.parquet"))
-          .localCheckpoint(true)
+        val e = truncatedEmbeddings(s, dir)
         val trained = IvfTrain.train(e, col("vec_id") % 64 === 0, 2,
           "vec_id", "embedding")
         Similarity.ivfTopK(e, trained, col("vec_id") % 100 === 0,
@@ -2247,9 +2251,9 @@ object LlmQueries extends QueryFamily {
         // the reassembly + normalization barrier: the corpus union below
         // reads this frame three times, and each read would otherwise
         // replay the census + reassembly subtree
-        val norm = TextAnalysis.withNormalizedText(cleaned)
-          .select(col("doc_id"), col("norm_text").as("text"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val norm = graft.CacheBarriers.barrier(
+          TextAnalysis.withNormalizedText(cleaned)
+            .select(col("doc_id"), col("norm_text").as("text")))
         val ws = words(col("text"))
         val corpus = norm
           .unionByName(norm.filter(col("doc_id") % 7 === 0)
@@ -3626,8 +3630,7 @@ object LlmQueries extends QueryFamily {
     QueryDef.sorted(
       "q120_ann_pq",
       (s, dir) => {
-        val e = spread(s, s.read.parquet(s"$dir/embeddings.parquet"))
-          .localCheckpoint(true)
+        val e = truncatedEmbeddings(s, dir)
         val cb = Pq.train(e, col("vec_id") % 64 === 0, dim = 64, m = 8,
           iters = 2)
         Pq.adcTopK(e, cb, col("vec_id") % 100 === 0, k = 3)
@@ -3671,8 +3674,7 @@ object LlmQueries extends QueryFamily {
     QueryDef.sorted(
       "q121_ann_ivfpq",
       (s, dir) => {
-        val e = spread(s, s.read.parquet(s"$dir/embeddings.parquet"))
-          .localCheckpoint(true)
+        val e = truncatedEmbeddings(s, dir)
         val coarse = Similarity.collectCentroids(
           e.filter(col("vec_id") % 64 === 0), "vec_id", "embedding")
         val cb = Pq.trainResidual(e, coarse, col("vec_id") % 40 === 0,
@@ -5141,8 +5143,7 @@ object LlmQueries extends QueryFamily {
     QueryDef.sorted(
       "q167_diversity_sample",
       (s, dir) => {
-        val e = spread(s, s.read.parquet(s"$dir/embeddings.parquet"))
-          .localCheckpoint(true)
+        val e = truncatedEmbeddings(s, dir)
         val trained = IvfTrain.train(e, col("vec_id") % 64 === 0, 2,
           "vec_id", "embedding")
         def arm(central: Boolean, name: String) =
@@ -5177,8 +5178,7 @@ object LlmQueries extends QueryFamily {
     QueryDef.sorted(
       "q168_diversity_incremental",
       (s, dir) => {
-        val e = spread(s, s.read.parquet(s"$dir/embeddings.parquet"))
-          .localCheckpoint(true)
+        val e = truncatedEmbeddings(s, dir)
         val trained = IvfTrain.train(e, col("vec_id") % 64 === 0, 2,
           "vec_id", "embedding")
         // score each slice ONCE and share the barriered frame across
@@ -5230,8 +5230,7 @@ object LlmQueries extends QueryFamily {
     QueryDef.sorted(
       "q169_ivf_quality",
       (s, dir) => {
-        val e = spread(s, s.read.parquet(s"$dir/embeddings.parquet"))
-          .localCheckpoint(true)
+        val e = truncatedEmbeddings(s, dir)
         val trained = IvfTrain.train(e, col("vec_id") % 64 === 0, 2,
           "vec_id", "embedding")
         Similarity.ivfQualityReport(e, trained)
@@ -5281,12 +5280,13 @@ object LlmQueries extends QueryFamily {
             k = K))
         val matrix = Cardinality.kmvJaccardMatrix(
           Cardinality.mergeKmv(shard(0), shard(1), "source", K), "source", K)
-        val exv = docs.filter(col("text").isNotNull)
-          .select(col("source").as("g"),
-            explode(TextHash.shingles(TextHash.words(col("text")), 3))
-              .as("w"))
-          .distinct()
-          .localCheckpoint(true) // consumed 3× below (sizes + both join sides)
+        // consumed 3× below (sizes + both join sides)
+        val exv = graft.CacheBarriers.truncate(
+          docs.filter(col("text").isNotNull)
+            .select(col("source").as("g"),
+              explode(TextHash.shingles(TextHash.words(col("text")), 3))
+                .as("w"))
+            .distinct(), eager = true)
         val sizes = exv.groupBy(col("g")).agg(count(lit(1)).as("n"))
         val interEx = exv.as("a")
           .join(exv.as("b"),
@@ -6213,7 +6213,7 @@ object LlmQueries extends QueryFamily {
     QueryDef.sorted(
       "q189_audio_window_plan",
       (s, dir) =>
-        // localCheckpoint: the window plan's filters + column chain
+        // truncate: the window plan's filters + column chain
         // otherwise inline the entire hex-built fixture tree into every
         // pushed-down predicate and output column (a ~100 KB physical
         // plan), and Catalyst + codegen over those megatrees cost ~4 s
@@ -6222,10 +6222,10 @@ object LlmQueries extends QueryFamily {
         // (guide §7.3 "very large plans" / §3.3 "materialise an
         // intermediate"); the meta frame is one narrow row per asset.
         Multimodal.audioWindowPlan(
-            Multimodal.withAudioMeta(syntheticWavs(s, dir))
-              .select("doc_id", "afmt", "channels", "sample_rate_hz",
-                "bits", "data_bytes")
-              .localCheckpoint(true),
+            graft.CacheBarriers.truncate(
+              Multimodal.withAudioMeta(syntheticWavs(s, dir))
+                .select("doc_id", "afmt", "channels", "sample_rate_hz",
+                  "bits", "data_bytes"), eager = true),
             winMs = 10, hopMs = 5)
           .select(col("doc_id").cast("long"), col("window_idx"),
             col("sample_off"), col("n_samples"), col("byte_off"),

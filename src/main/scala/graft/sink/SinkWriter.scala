@@ -1,16 +1,13 @@
 package graft.sink
 
-import java.util.concurrent.atomic.AtomicLong
-
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.slf4j.LoggerFactory
 
+import graft.CacheBarriers
 import graft.config.GraftConfig
 import graft.operators.{DeleteStrategies, Quarantine, Routing, TimeMachine, Upsert}
 
@@ -148,28 +145,6 @@ object SinkWriter {
     else cfg.fileNamespaces.map(ns =>
       ns -> cfg.mappings.getOrElse(ns, ns.toLowerCase))
 
-  /** Releases that took [[release]]'s fallback branch: a materialized
-    * frame whose analyzed plan was not the checkpoint's `LogicalRDD`, so
-    * its blocks could not be unpersisted directly. Stays 0 on the
-    * supported Spark version; anything else is a per-batch block leak. */
-  val fallbackReleases = new AtomicLong(0L)
-
-  private lazy val log = LoggerFactory.getLogger(getClass)
-
-  /** Frees a frame materialized by `localCheckpoint` NOW. Dataset.unpersist
-    * is a cache-manager no-op for a checkpointed frame, so the backing
-    * RDD is unpersisted directly; without this a long-lived stream holds
-    * every batch's blocks until GC. A plan of any other shape is counted
-    * in [[fallbackReleases]] and logged before the best-effort unpersist. */
-  private def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case r: LogicalRDD => r.rdd.unpersist(false); ()
-    case other =>
-      fallbackReleases.incrementAndGet()
-      log.warn(s"graft.sink: batch materialization is a ${other.nodeName}, " +
-        "not a LogicalRDD; its blocks may outlive the batch")
-      df.unpersist(false); ()
-  }
-
   /** Runs `body` with its Spark jobs described `graft.sink:<name>`, then
     * restores the caller's description (a streaming batch's own label). */
   private def layer[T](spark: SparkSession, name: String)(body: => T): T = {
@@ -235,126 +210,120 @@ object SinkWriter {
     * [[graft.config.ConfiguredPipeline.hotPath]] emits; meta columns are
     * resolved here when absent. */
   def writeBatch(batch: DataFrame, cfg: GraftConfig,
-                 backend: SinkBackend): Unit = {
+                 backend: SinkBackend): Unit = CacheBarriers.withScope {
     val spark = batch.sparkSession
     val routed0 =
       if (batch.columns.contains("meta_index")) batch
       else Routing.withMeta(Routing.extractDocMeta(batch), cfg.mappings,
         quarantine = true)
-    // Two materializations, both for this batch only (streaming-twin
-    // contract), each released through [[release]] by the `finally` of
-    // the `try` that opens right after it:
+    // Two truncations, both for this batch only and both released when
+    // the scope exits, on success or failure:
     //  - `tagged`, the routed batch: read by the quarantine channel, K4
     //    history, the drop/fence collect and the LWW pass;
     //  - `winners`, the fenced last-writer-wins resolution: read by the
     //    K1 upserts and the K2 delete resolution, so LWW and the fence
     //    run once per batch instead of once per consumer.
-    // localCheckpoint — not persist — because every downstream JOB would
+    // Truncations, not barriers, because every downstream JOB would
     // otherwise re-analyze and re-optimize the full envelope→route
     // logical plan (from_json + relate fan-out) just to hit the cache at
     // physical planning, and driver planning dominated the measured wall
     // (q171/q91 stage probe: Σ task run-time ≈ 1.3 s of a 7.8 s wall).
-    // Checkpointing truncates the plan to the materialized RDD for every
-    // consumer (guide §7.3, the q189 remedy). Batch-sized, same contract.
-    val tagged = layer(spark, "route")(routed0.localCheckpoint(true))
-    try {
-      // the rejects side output: every tagged op reaches the backend's
-      // quarantine channel (reject-sized frame); FATAL reasons (unkeyable
-      // id) then leave the sink-bound flow entirely — the reference skips
-      // them with an error log (monstache.go:3167-3171). A pre-routed
-      // batch without the tag column (a caller that ran withMeta in
-      // filter mode upstream) has nothing to report.
-      val hasTags = tagged.columns.contains(Quarantine.ReasonCol)
-      val b =
-        if (!hasTags) tagged
-        else tagged.filter(Quarantine.keep(col(Quarantine.ReasonCol)))
-          .drop(Quarantine.ReasonCol)
-      // the pre-delete layer frames, in replay order: quarantine rows
-      // (every tagged op reaches the channel), K4 history (every version
-      // appends, before dedup/fences and before the strategy-2 delete
-      // filter below: the time machine is the audit trail, and an
-      // IGNORED delete is still an op that happened), K3 drops, K1
-      // upserts — handed to the backend as ONE call so a driver-side
-      // backend can materialize them in one job (guide §2.6)
-      val quarRows =
-        if (!hasTags) None
-        else Some(tagged
-          .filter(col(Quarantine.ReasonCol).isNotNull)
-          .select(col("event_id"), col("namespace"), col("operation"),
-            col("id"), col("version"), col(Quarantine.ReasonCol)))
-      val histRows =
-        if (cfg.timeMachineNamespaces.isEmpty) None
-        else Some(TimeMachine.history(b,
-          cfg.timeMachineNamespaces, cfg.timeMachineIndexPrefix,
-          cfg.timeMachineIndexSuffix))
+    val tagged = layer(spark, "route")(
+      CacheBarriers.truncate(routed0, eager = true))
+    // the rejects side output: every tagged op reaches the backend's
+    // quarantine channel (reject-sized frame); FATAL reasons (unkeyable
+    // id) then leave the sink-bound flow entirely — the reference skips
+    // them with an error log (monstache.go:3167-3171). A pre-routed
+    // batch without the tag column (a caller that ran withMeta in
+    // filter mode upstream) has nothing to report.
+    val hasTags = tagged.columns.contains(Quarantine.ReasonCol)
+    val b =
+      if (!hasTags) tagged
+      else tagged.filter(Quarantine.keep(col(Quarantine.ReasonCol)))
+        .drop(Quarantine.ReasonCol)
+    // the pre-delete layer frames, in replay order: quarantine rows
+    // (every tagged op reaches the channel), K4 history (every version
+    // appends, before dedup/fences and before the strategy-2 delete
+    // filter below: the time machine is the audit trail, and an
+    // IGNORED delete is still an op that happened), K3 drops, K1
+    // upserts — handed to the backend as ONE call so a driver-side
+    // backend can materialize them in one job (guide §2.6)
+    val quarRows =
+      if (!hasTags) None
+      else Some(tagged
+        .filter(col(Quarantine.ReasonCol).isNotNull)
+        .select(col("event_id"), col("namespace"), col("operation"),
+          col("id"), col("version"), col(Quarantine.ReasonCol)))
+    val histRows =
+      if (cfg.timeMachineNamespaces.isEmpty) None
+      else Some(TimeMachine.history(b,
+        cfg.timeMachineNamespaces, cfg.timeMachineIndexPrefix,
+        cfg.timeMachineIndexSuffix))
 
-      // strategy 2 (ignore) drops delete ops before LAST-WRITER-WINS —
-      // the reference never replays them, so a key whose last in-batch
-      // op is a delete still indexes its prior data op (the same
-      // pre-LWW filter ConfiguredPipeline.indexedDocuments/startStream
-      // apply; resolving it after LWW would let the dead delete eat the
-      // winner). Applied AFTER the history append, which audits all ops.
-      val ops = if (cfg.deleteStrategy == 2) DeleteStrategies.ignore(b)
-                else b
+    // strategy 2 (ignore) drops delete ops before LAST-WRITER-WINS —
+    // the reference never replays them, so a key whose last in-batch
+    // op is a delete still indexes its prior data op (the same
+    // pre-LWW filter ConfiguredPipeline.indexedDocuments/startStream
+    // apply; resolving it after LWW would let the dead delete eat the
+    // winner). Applied AFTER the history append, which audits all ops.
+    val ops = if (cfg.deleteStrategy == 2) DeleteStrategies.ignore(b)
+              else b
 
-      // in-batch drop fence: data winners at or below their namespace's
-      // last covering drop were wiped before they could land. The fence
-      // is a driver literal, so applying it is a filter, not a join.
-      val (dropRows, winners) = layer(spark, "winners") {
-        val (drops, fence) = dropsAndFence(b, cfg)
-        val lww = Upsert.lastWriterWins(ops)
-        val outlived =
-          if (fence.isEmpty) lww
-          else {
-            val fenceV = element_at(typedLit(fence), lower(col("namespace")))
-            lww.filter(fenceV.isNull || col("version") > fenceV)
-          }
-        (drops, outlived.filter(col("operation").isin("i", "u", "d"))
-          .localCheckpoint(true))
-      }
-      try {
-        // K1 bulk upsert: the batch's live winners. One backend call
-        // applies quarantine + history + drops + upserts in replay order;
-        // deletes follow below (they read the POST-upsert sink state).
-        layer(spark, "pre_delete")(backend.applyPreDelete(quarRows,
-          histRows, dropRows, winners.filter(col("operation").isin("i", "u"))))
+    // in-batch drop fence: data winners at or below their namespace's
+    // last covering drop were wiped before they could land. The fence
+    // is a driver literal, so applying it is a filter, not a join.
+    val (dropRows, winners) = layer(spark, "winners") {
+      val (drops, fence) = dropsAndFence(b, cfg)
+      val lww = Upsert.lastWriterWins(ops)
+      val outlived =
+        if (fence.isEmpty) lww
+        else {
+          val fenceV = element_at(typedLit(fence), lower(col("namespace")))
+          lww.filter(fenceV.isNull || col("version") > fenceV)
+        }
+      (drops, CacheBarriers.truncate(
+        outlived.filter(col("operation").isin("i", "u", "d")), eager = true))
+    }
+    // K1 bulk upsert: the batch's live winners. One backend call
+    // applies quarantine + history + drops + upserts in replay order;
+    // deletes follow below (they read the POST-upsert sink state).
+    layer(spark, "pre_delete")(backend.applyPreDelete(quarRows,
+      histRows, dropRows, winners.filter(col("operation").isin("i", "u"))))
 
-        // K2 deletes, resolved per configured strategy against the
-        // POST-upsert sink state, normalized to (id, del_index,
-        // del_routing, del_version) — the tombstone's own version rides
-        // along so the backend can enforce the versioned-delete fence
-        val tombs = winners.filter(col("operation") === "d")
-        layer(spark, "delete")(cfg.deleteStrategy match {
-          case 2 => // ignore: deletes are dropped (monstache.go:4068-4070)
-          case 1 =>
-            // stateful resolution against the backend's saved
-            // coordinates, used EXACTLY as stored (lowercaseSavedIndex =
-            // false): the key the upsert created is authoritative for a
-            // pluggable backend, where the reference's getIndexMeta
-            // lowercasing — a no-op against ES — would make a mixed-case
-            // [[mapping]] index undeletable.
-            val metaStore = backend.sinkState(spark)
-              .select(col("namespace"), col("id"),
-                col("meta_index").as("saved_index"),
-                col("meta_routing").as("saved_routing"))
-            backend.delete(DeleteStrategies.stateful(
-                tombs.select(col("namespace"), col("id"), col("version")),
-                metaStore, lowercaseSavedIndex = false)
-              .select(col("id"), col("meta_index").as("del_index"),
-                col("meta_routing").as("del_routing"),
-                col("version").as("del_version")))
-          case _ =>
-            val resolved = DeleteStrategies.statelessRouted(
-              tombs.drop("meta_index", "meta_routing"),
-              backend.sinkState(spark),
-              deleteProtection = !cfg.disableDeleteProtection)
-            backend.delete(resolved.filter(col("status") === "deleted")
-              .select(col("id"), col("hit_index").as("del_index"),
-                col("hit_routing").as("del_routing"),
-                col("version").as("del_version")))
-        })
-      } finally release(winners)
-    } finally release(tagged)
+    // K2 deletes, resolved per configured strategy against the
+    // POST-upsert sink state, normalized to (id, del_index,
+    // del_routing, del_version) — the tombstone's own version rides
+    // along so the backend can enforce the versioned-delete fence
+    val tombs = winners.filter(col("operation") === "d")
+    layer(spark, "delete")(cfg.deleteStrategy match {
+      case 2 => // ignore: deletes are dropped (monstache.go:4068-4070)
+      case 1 =>
+        // stateful resolution against the backend's saved
+        // coordinates, used EXACTLY as stored (lowercaseSavedIndex =
+        // false): the key the upsert created is authoritative for a
+        // pluggable backend, where the reference's getIndexMeta
+        // lowercasing — a no-op against ES — would make a mixed-case
+        // [[mapping]] index undeletable.
+        val metaStore = backend.sinkState(spark)
+          .select(col("namespace"), col("id"),
+            col("meta_index").as("saved_index"),
+            col("meta_routing").as("saved_routing"))
+        backend.delete(DeleteStrategies.stateful(
+            tombs.select(col("namespace"), col("id"), col("version")),
+            metaStore, lowercaseSavedIndex = false)
+          .select(col("id"), col("meta_index").as("del_index"),
+            col("meta_routing").as("del_routing"),
+            col("version").as("del_version")))
+      case _ =>
+        val resolved = DeleteStrategies.statelessRouted(
+          tombs.drop("meta_index", "meta_routing"),
+          backend.sinkState(spark),
+          deleteProtection = !cfg.disableDeleteProtection)
+        backend.delete(resolved.filter(col("status") === "deleted")
+          .select(col("id"), col("hit_index").as("del_index"),
+            col("hit_routing").as("del_routing"),
+            col("version").as("del_version")))
+    })
   }
 
   /** Continuous form: envelope stream → optional transform → the batch

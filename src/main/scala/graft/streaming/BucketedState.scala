@@ -113,10 +113,9 @@ object BucketedState {
                     (combine: DataFrame => DataFrame): Unit = {
     val spark = batch.sparkSession
     ensureMeta(spark, stateDir, numBuckets)
-    val bucketed = batch
-      .withColumn("__bucket", bucketOf(col(keyCol), numBuckets))
-      .persist()
-    try {
+    graft.CacheBarriers.withScope {
+      val bucketed = graft.CacheBarriers.barrier(batch
+        .withColumn("__bucket", bucketOf(col(keyCol), numBuckets)))
       val touched = bucketed.select("__bucket").distinct()
         .collect().map(_.getLong(0)).sorted
       // independent version chains → concurrent Spark jobs (the scheduler
@@ -150,7 +149,7 @@ object BucketedState {
         }
         Await.result(Future.sequence(merges), Duration.Inf)
       } finally pool.shutdown()
-    } finally bucketed.unpersist()
+    }
   }
 
   /** Compact the store: rewrite each bucket's latest committed version

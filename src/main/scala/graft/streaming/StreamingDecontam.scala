@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.llm.Dedup
@@ -39,13 +40,16 @@ object StreamingDecontam {
       .outputMode("append")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val signed = Dedup.signCorpus(batch, idCol, textCol, shingleN)
-        // the batch's signature persist is scoped to the batch — the
-        // finally keeps long-running streams from accreting one cached
-        // signature table per micro-batch even when a flaky sink makes
-        // onPairs throw and Spark replays the batch
-        try onPairs(Dedup.pairsBetweenSigned(signed, evalSigned), batchId)
-        finally signed.unpersist()
+        // the batch's signature barrier is scoped to the batch, so a
+        // long-running stream accretes no cached signature table per
+        // micro-batch, even when a flaky sink makes onPairs throw and
+        // Spark replays the batch
+        graft.CacheBarriers.withScope {
+          val signed = graft.CacheBarriers.barrier(
+            Dedup.withSignature(batch, textCol, shingleN)
+              .select(col(idCol).as("doc_id"), col("sh"), col("bkeys")))
+          onPairs(Dedup.pairsBetweenSigned(signed, evalSigned), batchId)
+        }
         ()
       }
       .start()

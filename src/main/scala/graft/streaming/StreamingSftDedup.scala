@@ -43,10 +43,10 @@ object StreamingSftDedup {
       .outputMode("append")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val pairs = graft.CacheBarriers.barrier(Chat.sftPairs(
-          Chat.withTurnStats(Chat.parseTurns(batch, jsonCol)), convIdCol))
-        try {
+        graft.CacheBarriers.withScope {
+          val spark = batch.sparkSession
+          val pairs = graft.CacheBarriers.barrier(Chat.sftPairs(
+            Chat.withTurnStats(Chat.parseTurns(batch, jsonCol)), convIdCol))
           // predecessor census ONLY (beforeBatch): a replayed batch must
           // not see its own committed fold, or every pair turns kept=false
           val seen = StreamingUpsert
@@ -57,7 +57,7 @@ object StreamingSftDedup {
             batchId)
           StreamingAdditiveCensus.mergeBatch(promptCensus(pairs), batchId,
             stateDir, Seq("prompt_hash"))
-        } finally pairs.unpersist()
+        }
         ()
       }
       .start()

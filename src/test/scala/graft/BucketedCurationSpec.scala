@@ -160,6 +160,18 @@ class BucketedCurationSpec extends AnyFunSuite {
       keptSet(Curation.curate(df(b1 ++ b2 ++ b3))))
   }
 
+  test("one mergeBatch leaves no RDD blocks and registers nothing globally") {
+    val stateDir = Files.createTempDirectory("bcur-leak").toString
+    BucketedCuration.bootstrap(df(b1), stateDir, NumBuckets)
+    CacheBarriers.releaseAll()
+    val sc = spark.sparkContext
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    BucketedCuration.mergeBatch(df(b2), 0L, stateDir, NumBuckets)
+    val left = sc.getRDDStorageInfo.filterNot(r => before(r.id))
+    assert(left.isEmpty, s"blocks left: ${left.mkString(", ")}")
+    assert(CacheBarriers.releaseAll() == 0)
+  }
+
   test("merging without bootstrap fails loudly") {
     val stateDir = Files.createTempDirectory("graft-bcur5").toString
     val e = intercept[IllegalStateException](

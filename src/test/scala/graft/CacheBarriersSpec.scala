@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.SparkException
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.{Dedup, Sampling}
+import graft.llm.{Bpe, Dedup, Sampling}
 
 /** The operator-internal persist barriers must be releasable by a
   * long-lived session (the ADVICE leak: repeated batch calls accreting
@@ -73,5 +76,71 @@ class CacheBarriersSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Sampling.temperatureRates(docs, "doc_id", maxStrata = 2))
     assert(spark.sharedState.cacheManager.isEmpty) // even on the loud path
+  }
+
+  /** RDD ids with live blocks that were not live in `before`. */
+  private def newBlocks(before: Set[Int]): Seq[Int] =
+    spark.sparkContext.getRDDStorageInfo.map(_.id).filterNot(before).toSeq
+  private def liveBlocks(): Set[Int] =
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+  private def rddId(ds: DataFrame): Int =
+    ds.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
+
+  for (eager <- Seq(true, false))
+    test(s"truncate(eager = $eager) registers with the open scope; exit " +
+        "frees its blocks through the LogicalRDD") {
+      CacheBarriers.releaseAll()
+      val fallbacks = CacheBarriers.fallbackReleases.get
+      val before = liveBlocks()
+      val n = CacheBarriers.withScope {
+        val t = CacheBarriers.truncate(spark.range(100).toDF("id"), eager)
+        val n = t.count()
+        assert(newBlocks(before) == Seq(rddId(t)))
+        n
+      }
+      assert(n == 100)
+      assert(newBlocks(before).isEmpty)
+      assert(CacheBarriers.releaseAll() == 0) // nothing leaked to global
+      assert(CacheBarriers.fallbackReleases.get == fallbacks)
+    }
+
+  test("release(prev) in a loop frees only the superseded round") {
+    val before = liveBlocks()
+    CacheBarriers.withScope {
+      var cur = CacheBarriers.truncate(spark.range(50).toDF("id"), eager = true)
+      for (_ <- 1 to 3) {
+        val prev = cur
+        cur = CacheBarriers.truncate(
+          prev.select((col("id") + 1).as("id")), eager = true)
+        CacheBarriers.release(prev)
+        assert(newBlocks(before) == Seq(rddId(cur)))
+      }
+      assert(cur.agg(sum("id")).head().getLong(0) == (3L to 52L).sum)
+    }
+    assert(newBlocks(before).isEmpty)
+  }
+
+  test("Bpe.train with 5 merges leaves one round's blocks, not 6") {
+    import spark.implicits._
+    CacheBarriers.releaseAll()
+    val before = liveBlocks()
+    val census = Seq(("low", 5L), ("lower", 2L), ("newest", 6L),
+      ("widest", 3L)).toDF("w", "n")
+    val (merges, syms) = Bpe.train(census, nMerges = 5)
+    assert(merges.size == 5)
+    assert(newBlocks(before) == Seq(rddId(syms)))
+    assert(CacheBarriers.releaseAll() == 1)
+    assert(newBlocks(before).isEmpty)
+  }
+
+  test("reading a truncation after its scope closed fails loudly") {
+    val t = CacheBarriers.withScope {
+      val t = CacheBarriers.truncate(spark.range(10).toDF("id"), eager = true)
+      assert(t.count() == 10)
+      t
+    }
+    var rows: Array[org.apache.spark.sql.Row] = null
+    intercept[SparkException] { rows = t.collect() }
+    assert(rows == null)
   }
 }

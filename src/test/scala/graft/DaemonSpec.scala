@@ -194,12 +194,15 @@ class DaemonSpec extends AnyFunSuite {
           transport = Some("daemon-sink-src"), sink = Some("daemon-sink")))
         try running.query.awaitTermination() finally running.close()
       }
+      CacheBarriers.releaseAll() // drain what earlier suites left
       run() // chunk1, then the daemon exits (the kill)
       val afterKill = backend.state.keySet
       assert(afterKill == Set(("parts_idx", "1"), ("app.t0", "7")),
         s"chunk1 state before the resume, got $afterKill")
       log.synchronized { log ++= chunk2 }
       run() // resume from checkpoint: only chunk2 replays
+      // every batch's materializations were scoped to the batch
+      assert(CacheBarriers.releaseAll() == 0)
 
       val twin = new InMemorySinkBackend
       graft.sink.SinkWriter.writeBatch(
@@ -263,6 +266,9 @@ class DaemonSpec extends AnyFunSuite {
           transport = Some("daemon-cur-src"), pipeline = Some("curation")))
         try running.query.awaitTermination() finally running.close()
       }
+      CacheBarriers.releaseAll() // drain what earlier suites left
+      val sc = spark.sparkContext
+      val blocksBefore = sc.getRDDStorageInfo.map(_.id).toSet
       run() // chunk1, then the daemon exits (the kill)
       val stateDir = s"$workDir/state"
       def kept(): Set[Long] =
@@ -272,6 +278,9 @@ class DaemonSpec extends AnyFunSuite {
         "chunk1 all fresh: every doc kept before the resume")
       log.synchronized { log ++= chunk2 }
       run() // resume from checkpoint: only chunk2 replays
+      assert(CacheBarriers.releaseAll() == 0)
+      val left = sc.getRDDStorageInfo.filterNot(r => blocksBefore(r.id))
+      assert(left.isEmpty, s"blocks left: ${left.mkString(", ")}")
 
       // batch twin: empty bootstrap artifacts, then the same two
       // batches folded through curateIncremental

@@ -163,4 +163,20 @@ class SimilarityEdgeSpec extends AnyFunSuite {
       queryPred = col("vec_id") % 7 === 0, k = 3, nprobe = 2, rerank = 40))
     assert(quant == exact)
   }
+
+  test("a quantized probe consumed inside withScope leaves no cache") {
+    import spark.implicits._
+    CacheBarriers.releaseAll()
+    spark.sharedState.cacheManager.clearCache()
+    val vs = (0 until 40).map { i =>
+      (i.toLong, Array.tabulate(4)(j => math.sin(i * (j + 1) + 1).toFloat))
+    }.toDF("vec_id", "embedding")
+    val n = CacheBarriers.withScope {
+      Similarity.ivfTopKQuantized(vs, centroidPred = col("vec_id") % 10 === 0,
+        queryPred = col("vec_id") % 7 === 0, k = 3, nprobe = 2, rerank = 6)
+        .count()
+    }
+    assert(n > 0)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

@@ -321,7 +321,7 @@ class SinkWriterSpec extends AnyFunSuite {
       ev(0, "1", "app.t0", "i", 10),
       drop(1, "app.t1", "drop_coll", 11)).toDF(), cfg,
       new InMemorySinkBackend)
-    assert(SinkWriter.fallbackReleases.get == 0)
+    assert(CacheBarriers.fallbackReleases.get == 0)
   }
 
   test("each writeBatch layer labels its jobs and restores the caller's") {

@@ -77,4 +77,23 @@ class StreamingSftDedupSpec extends AnyFunSuite {
     assert(census.count() === 3L) // templates 0, 1, 2
     assert(census.agg(sum("n")).collect()(0).getLong(0) === 5L)
   }
+
+  test("a multi-batch run leaves nothing in the global registry") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("sftdedup-scope").toString
+    CacheBarriers.releaseAll()
+    val src = MemoryStream[(Long, String)]
+    val q = StreamingSftDedup.start(
+      src.toDF().toDF("conv_id", "conv_json"), s"$dir/state", s"$dir/ckpt",
+      (df, _) => { df.collect(); () },
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    try all.grouped(2).foreach { chunk => // three micro-batches
+      src.addData(chunk: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+    assert(CacheBarriers.releaseAll() == 0)
+  }
 }
