@@ -93,7 +93,7 @@ object BucketedCuration {
 
   private def tableBefore(spark: SparkSession, dir: String,
                           maxExcl: Long): Option[DataFrame] =
-    BucketedState.tableBefore(spark, dir, maxExcl)
+    VersionedState.tableBefore(spark, dir, maxExcl)
 
   /** Assemble the [[CurationArtifacts]] view of all stores as of the
     * latest committed state strictly below `maxExcl`. */

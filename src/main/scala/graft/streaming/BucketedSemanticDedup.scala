@@ -72,7 +72,7 @@ object BucketedSemanticDedup {
       maxExcl).getOrElse(throw new IllegalStateException(
       s"BucketedSemanticDedup: no committed cluster store in $stateDir " +
         "— run bootstrap() before streaming"))
-    BucketedState.tableBefore(spark, s"$stateDir/labelmap", maxExcl) match {
+    VersionedState.tableBefore(spark, s"$stateDir/labelmap", maxExcl) match {
       case None => raw
       case Some(m) =>
         raw.alias("c")
@@ -114,7 +114,7 @@ object BucketedSemanticDedup {
       // label (the batch's relabels' domain — labels terminal until now
       // — is disjoint from the map's domain, so the union stays a
       // function); written LAST = the batch's commit signal
-      val lm = BucketedState.tableBefore(spark, lmDir, batchId) match {
+      val lm = VersionedState.tableBefore(spark, lmDir, batchId) match {
         case None => relabels
         case Some(old) =>
           val r = relabels.select(col("from_lbl").as("r_from"),

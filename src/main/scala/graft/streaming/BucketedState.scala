@@ -101,7 +101,7 @@ object BucketedState {
     * pluggable combine, so the SAME only-touched-buckets-rewrite story
     * serves every artifact whose merge is a keyed partial-aggregate:
     * LWW winners ([[mergeBatch]]), additive censuses
-    * ([[StreamingLineCensus.mergeBatchBucketed]]), count tables, model
+    * ([[StreamingAdditiveCensus.mergeBatchBucketed]]), count tables, model
     * counts. `combine` runs per touched bucket over (previous bucket
     * state ∪ batch slice) and must treat its input rows as mergeable
     * partials keyed within the bucket — i.e.
@@ -181,53 +181,63 @@ object BucketedState {
   def compact(spark: SparkSession, stateDir: String,
               upToExcl: Long = Long.MaxValue): Unit = {
     val f = VersionedState.fs(spark, stateDir)
-    val root = new Path(stateDir)
-    if (!f.exists(root)) return
-    f.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("b"))
-      .foreach { st =>
-        val bDir = st.getPath.toString
-        val vs = VersionedState.versions(spark, bDir)
-        vs.headOption.filter(_ < upToExcl).foreach { v =>
-          val live = new Path(s"$bDir/v$v")
-          val tmp = new Path(s"$bDir/.v$v.compacting")
-          val old = new Path(s"$bDir/.v$v.old")
-          require(!f.exists(old),
-            s"$old exists: a prior compaction crashed mid-swap. Recover " +
-              s"first (rename it back to $live if $live is missing, " +
-              "else delete it).")
-          // a crashed pre-swap rewrite left only the tmp copy: discard
-          if (f.exists(tmp)) f.delete(tmp, true)
-          spark.read.parquet(live.toString).coalesce(1)
-            .write.mode("overwrite").parquet(tmp.toString)
-          require(f.rename(live, old),
-            s"compact: rename $live -> $old failed; live state untouched")
-          require(f.rename(tmp, live),
-            s"compact: rename $tmp -> $live failed; recover by renaming " +
-              s"$old back to $live")
-          f.delete(old, true)
-          // superseded versions: the fence says v can never be replayed,
-          // so its predecessor crash window is no longer needed
-          vs.filter(_ != v).foreach(o =>
-            f.delete(new Path(s"$bDir/v$o"), true))
-        }
+    bucketDirs(spark, stateDir).foreach { bDir =>
+      val vs = VersionedState.versions(spark, bDir)
+      vs.headOption.filter(_ < upToExcl).foreach { v =>
+        val live = new Path(s"$bDir/v$v")
+        val tmp = new Path(s"$bDir/.v$v.compacting")
+        val old = new Path(s"$bDir/.v$v.old")
+        require(!f.exists(old),
+          s"$old exists: a prior compaction crashed mid-swap. Recover " +
+            s"first (rename it back to $live if $live is missing, " +
+            "else delete it).")
+        // a crashed pre-swap rewrite left only the tmp copy: discard
+        if (f.exists(tmp)) f.delete(tmp, true)
+        spark.read.parquet(live.toString).coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
+        require(f.rename(live, old),
+          s"compact: rename $live -> $old failed; live state untouched")
+        require(f.rename(tmp, live),
+          s"compact: rename $tmp -> $live failed; recover by renaming " +
+            s"$old back to $live")
+        f.delete(old, true)
+        // superseded versions: the fence says v can never be replayed,
+        // so its predecessor crash window is no longer needed
+        vs.filter(_ != v).foreach(o =>
+          f.delete(new Path(s"$bDir/v$o"), true))
       }
+    }
+  }
+
+  /** The bucket chains (`<stateDir>/b<bucket>`) present under a store. */
+  private def bucketDirs(spark: SparkSession, stateDir: String): Seq[String] = {
+    val f = VersionedState.fs(spark, stateDir)
+    val root = new Path(stateDir)
+    if (!f.exists(root)) Seq.empty
+    else f.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("b"))
+      .map(_.getPath.toString)
   }
 
   /** Full state: each bucket's latest COMMITTED version, unioned. */
-  def latestState(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    val p = new Path(stateDir)
-    val fs = VersionedState.fs(spark, stateDir)
-    if (!fs.exists(p)) return None
-    val frames = fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("b"))
-      .flatMap { st =>
-        val dir = st.getPath.toString
-        VersionedState.versions(spark, dir).headOption
-          .map(v => spark.read.parquet(s"$dir/v$v"))
-      }
-    frames.reduceOption(_.unionByName(_))
-  }
+  def latestState(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    bucketDirs(spark, stateDir)
+      .flatMap(VersionedState.tableBefore(spark, _, Long.MaxValue))
+      .reduceOption(_.unionByName(_))
+
+  /** The touched-bucket read: each bucket's latest version strictly
+    * below `maxExcl`, unioned over ONLY the buckets the values of `keys`
+    * (a one-column frame) hash into — the partition-pruned read a
+    * bucketed fold stitches its batch against. Untouched buckets are not
+    * listed. */
+  private[streaming] def touchedBefore(stateDir: String, keys: DataFrame,
+                                       numBuckets: Int,
+                                       maxExcl: Long): Option[DataFrame] =
+    keys.select(bucketOf(keys.col(keys.columns.head), numBuckets))
+      .distinct().collect().map(_.getLong(0)).sorted.toSeq
+      .flatMap(b => VersionedState.tableBefore(keys.sparkSession,
+        s"$stateDir/b$b", maxExcl))
+      .reduceOption(_.unionByName(_))
 
   /** Live view (winners that are not tombstones), like
     * [[StreamingUpsert.liveState]] — empty-envelope schema before the
@@ -244,24 +254,16 @@ object BucketedState {
     * as a missing store. Shared by every bucketed artifact store
     * ([[BucketedCuration]], [[BucketedSemanticDedup]]). */
   private[graft] def stateBefore(spark: SparkSession, dir: String,
-                                     maxExcl: Long): Option[DataFrame] = {
-    val p = new Path(dir)
-    val f = VersionedState.fs(spark, dir)
-    if (!f.exists(p)) return None
-    f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("b"))
-      .flatMap { st =>
-        val d = st.getPath.toString
-        VersionedState.versions(spark, d).find(_ < maxExcl)
-          .map(v => spark.read.parquet(s"$d/v$v"))
-      }
+                                     maxExcl: Long): Option[DataFrame] =
+    bucketDirs(spark, dir)
+      .flatMap(VersionedState.tableBefore(spark, _, maxExcl))
       .reduceOption(_.unionByName(_))
       .orElse {
-        if (f.exists(new Path(s"$dir/_schema/_SUCCESS")))
+        if (VersionedState.fs(spark, dir)
+            .exists(new Path(s"$dir/_schema/_SUCCESS")))
           Some(spark.read.parquet(s"$dir/_schema"))
         else None
       }
-  }
 
   /** Persist the store's row schema once (an empty parquet table) so an
     * empty store reads as an empty TYPED frame. Overwrite-on-missing
@@ -272,11 +274,4 @@ object BucketedState {
     if (!f.exists(new Path(s"$dir/_schema/_SUCCESS")))
       slice.limit(0).write.mode("overwrite").parquet(s"$dir/_schema")
   }
-
-  /** Latest committed version of a small whole-table chain strictly
-    * below `maxExcl` — the non-bucketed companion read. */
-  private[graft] def tableBefore(spark: SparkSession, dir: String,
-                                     maxExcl: Long): Option[DataFrame] =
-    VersionedState.versions(spark, dir).find(_ < maxExcl)
-      .map(v => spark.read.parquet(s"$dir/v$v"))
 }

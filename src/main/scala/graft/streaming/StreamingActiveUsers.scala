@@ -15,10 +15,11 @@ import graft.operators.EventAnalytics
   * contract: late events just add pairs, and replays are absorbed (a
   * replayed pair is not novel).
   *
-  * Both chains ride the [[VersionedState]] replay-against-predecessor
-  * protocol; the report merge is a day-keyed upsert (the batch's
-  * recomputed rows win — [[EventAnalytics.mergeActiveReport]]), which is
-  * exactly [[StreamingUpsert]]'s LWW shape keyed by day.
+  * Both chains ride [[VersionedState.advance]], the report nested inside
+  * the state's fold so it commits first. The report merge is a day-keyed
+  * upsert (the batch's recomputed rows win —
+  * [[EventAnalytics.mergeActiveReport]]), which is exactly
+  * [[StreamingUpsert]]'s LWW shape keyed by day.
   */
 object StreamingActiveUsers {
 
@@ -41,29 +42,19 @@ object StreamingActiveUsers {
                 userCol: String = "user_id"): Unit =
     graft.CacheBarriers.withScope {
       val spark = batch.sparkSession
-      val svs = VersionedState.versions(spark, stateDir)
-      VersionedState.requireNoNewerThan(svs, stateDir, batchId)
-      val prev = svs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$stateDir/v$v"))
-        .getOrElse(EventAnalytics.emptyActiveState(spark))
-      val (delta, state) = EventAnalytics.activeUsersIncremental(
-        batch, prev, tsUs(batch), windowDays, userCol)
-      mergeReport(spark, reportDir, batchId, delta)
-      state.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-      VersionedState.gcBefore(spark, stateDir, batchId, svs)
+      VersionedState.advance(spark, stateDir, batchId) { prev =>
+        val (delta, state) = EventAnalytics.activeUsersIncremental(batch,
+          prev.getOrElse(EventAnalytics.emptyActiveState(spark)),
+          tsUs(batch), windowDays, userCol)
+        mergeReport(spark, reportDir, batchId, delta)
+        state
+      }
     }
 
   private def mergeReport(spark: SparkSession, reportDir: String,
-                          batchId: Long, delta: DataFrame): Unit = {
-    val rvs = VersionedState.versions(spark, reportDir)
-    VersionedState.requireNoNewerThan(rvs, reportDir, batchId)
-    val report = rvs.find(_ < batchId)
-      .map(v => spark.read.parquet(s"$reportDir/v$v"))
-      .map(EventAnalytics.mergeActiveReport(_, delta))
-      .getOrElse(delta)
-    report.write.mode("overwrite").parquet(s"$reportDir/v$batchId")
-    VersionedState.gcBefore(spark, reportDir, batchId, rvs)
-  }
+                          batchId: Long, delta: DataFrame): Unit =
+    VersionedState.advance(spark, reportDir, batchId)(
+      _.map(EventAnalytics.mergeActiveReport(_, delta)).getOrElse(delta))
 
   // ── The 100 TB state shape ────────────────────────────────────────────
 
@@ -108,14 +99,8 @@ object StreamingActiveUsers {
       // day → bucket via the same hash the layout pins (a tiny job — the
       // day range is calendar-bounded, never data-sized)
       import spark.implicits._
-      val sliceBuckets = sliceDays.toDF("day")
-        .select(BucketedState.bucketOf(col("day"), numBuckets).as("b"))
-        .distinct().collect().map(_.getLong(0)).sorted
-      val slice = sliceBuckets.toSeq.flatMap { b =>
-        val d = s"$stateDir/b$b"
-        VersionedState.versions(spark, d).find(_ < batchId)
-          .map(v => spark.read.parquet(s"$d/v$v"))
-      }.reduceOption(_.unionByName(_))
+      val slice = BucketedState.touchedBefore(stateDir,
+          sliceDays.toDF("day"), numBuckets, batchId)
         .getOrElse(EventAnalytics.emptyActiveState(spark))
         // a bucket holds every day hashing into it — re-restrict to the
         // influence range so the slice premise is what the math sees

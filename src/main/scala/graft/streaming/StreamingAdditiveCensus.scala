@@ -5,35 +5,38 @@ import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The durable fold for the WHOLE additive-census family — one streaming
-  * twin serving every artifact that merges by key-wise SUM: the quantile
-  * bucket census ([[graft.llm.QuantileSketch.census]], q173), the
-  * count-min cell table ([[graft.llm.CountMin.census]], q176), the BM25
-  * (doc, term, tf) index census ([[graft.llm.Features.bm25Census]],
-  * q174), or any future `(keys…, counts…)` frame with the same algebra.
-  * [[StreamingDfCensus]] predates this module and keeps its
-  * self-describing NULL-sentinel handling; new additive artifacts plug
-  * in here instead of growing another bespoke streaming file.
+  * twin serving every artifact that merges by key-wise SUM. `censusOf`
+  * and `keyCols` pick the artifact:
+  *
+  *   - line census: [[graft.llm.Dedup.lineCensus]] on `lh`;
+  *   - span census: [[graft.llm.Dedup.spanCensus]] on `g`;
+  *   - document-frequency census with its doc count:
+  *     [[graft.llm.Features.dfCensusWithCount]] on `wh` (the count rides
+  *     the NULL-key row; NULL keys group as one);
+  *   - score histogram: [[graft.llm.Quantiles.scoreHistogram]] on
+  *     `(source, bin)`;
+  *   - centroid sums: [[graft.llm.Similarity.labelCentroidSums]] on
+  *     `(label, pos)`;
+  *   - quantile bucket census ([[graft.llm.QuantileSketch.census]], q173),
+  *     count-min cells ([[graft.llm.CountMin.census]], q176), the BM25
+  *     (doc, term, tf) census ([[graft.llm.Features.bm25Census]], q174),
+  *     or any future `(keys…, counts…)` frame with the same algebra.
   *
   * Additive censuses are associative and commutative but NOT idempotent
-  * (a replayed batch would double-count), so durability rides the
-  * [[VersionedState]] parquet chain (`<dir>/v<batchId>`): a REPLAYED
-  * batch recomputes its version from the predecessor state rather than
-  * re-merging, the `_SUCCESS` commit protocol keeps torn writes
-  * invisible, and the stale-checkpoint guard fails loudly instead of
-  * resurrecting old counts — the same contract as every other fold in
-  * this package.
+  * (a replayed batch would double-count), so durability rides
+  * [[VersionedState.advance]]: a replayed batch recomputes its version
+  * from the predecessor rather than re-merging.
   *
   * Two layouts, matching the artifact's size class:
   *
   *   - [[mergeBatch]] — one global chain. Right when the census is
   *     CONFIG-sized by construction (quantile sketch: ≤ a few hundred
-  *     rows per group; CMS: ≤ D·W rows per group) — each batch rewrites
-  *     a frame that never grows past configuration.
+  *     rows per group; CMS: ≤ D·W rows per group) or fits a few GB.
   *   - [[mergeBatchBucketed]] — [[BucketedState]]'s layout keyed by
   *     `hash(bucketKey)`, an additive per-bucket combine. The 100 TB
-  *     shape for CORPUS-keyed censuses (the BM25 census has one row per
-  *     (doc, term)): a batch rewrites only the buckets its own keys
-  *     hash into.
+  *     shape for CORPUS-keyed censuses (BM25: one row per (doc, term);
+  *     span: one per distinct window): a batch rewrites only the buckets
+  *     its own keys hash into.
   *
   * Reference framing: the reference engine keeps no mergeable statistics
   * at all — `/root/reference/monstache.go` delegates aggregation to the
@@ -42,35 +45,36 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingAdditiveCensus {
 
+  /** The summed columns: every non-key column, and there must be one. */
+  private def countCols(census: DataFrame, keyCols: Seq[String]): Seq[String] = {
+    val cnt = census.columns.filterNot(keyCols.contains).toSeq
+    require(cnt.nonEmpty,
+      s"additive census has no count column: every column is a key " +
+        s"(${keyCols.mkString(", ")}), so there is nothing to sum")
+    cnt
+  }
+
+  private def sumByKeys(rows: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val sums = countCols(rows, keyCols).map(c => sum(col(c)).as(c))
+    rows.groupBy(keyCols.map(col): _*).agg(sums.head, sums.tail: _*)
+  }
+
   /** Key-wise additive merge: every non-key column must be summable.
     * Column set is taken from `a` (both sides must agree — unionByName
     * raises otherwise). */
-  def merge(a: DataFrame, b: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val cntCols = a.columns.filterNot(keyCols.contains)
-    a.unionByName(b)
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(col(cntCols.head)).as(cntCols.head),
-        cntCols.tail.map(c => sum(col(c)).as(c)): _*)
-  }
+  def merge(a: DataFrame, b: DataFrame, keyCols: Seq[String]): DataFrame =
+    sumByKeys(a.unionByName(b), keyCols)
 
   /** The current committed census, if any batch committed. */
   def latest(spark: SparkSession, censusDir: String): Option[DataFrame] =
     StreamingUpsert.latestState(spark, censusDir)
 
-  /** Idempotent fold of one micro-batch's census into the global chain.
-    * One directory listing serves the guard, the predecessor lookup, and
-    * the GC. */
+  /** Idempotent fold of one micro-batch's census into the global chain. */
   def mergeBatch(batchCensus: DataFrame, batchId: Long, censusDir: String,
                  keyCols: Seq[String]): Unit = {
-    val spark = batchCensus.sparkSession
-    val vs = VersionedState.versions(spark, censusDir)
-    VersionedState.requireNoNewerThan(vs, censusDir, batchId)
-    val merged = vs.find(_ < batchId)
-      .map(v => spark.read.parquet(s"$censusDir/v$v"))
-      .map(prev => merge(prev, batchCensus, keyCols))
-      .getOrElse(batchCensus)
-    merged.write.mode("overwrite").parquet(s"$censusDir/v$batchId")
-    VersionedState.gcBefore(spark, censusDir, batchId, vs)
+    countCols(batchCensus, keyCols) // refuse a key-only census up front
+    VersionedState.advance(batchCensus.sparkSession, censusDir, batchId)(
+      _.map(merge(_, batchCensus, keyCols)).getOrElse(batchCensus))
   }
 
   /** The bucketed fold: same versioned-merge idempotence per bucket,
@@ -78,15 +82,11 @@ object StreamingAdditiveCensus {
     * the bucket hash rides (the highest-cardinality one). */
   def mergeBatchBucketed(batchCensus: DataFrame, batchId: Long,
                          censusDir: String, numBuckets: Int,
-                         bucketKey: String, keyCols: Seq[String]): Unit =
+                         bucketKey: String, keyCols: Seq[String]): Unit = {
+    countCols(batchCensus, keyCols) // refuse a key-only census up front
     BucketedState.mergeBatchWith(batchCensus, batchId, censusDir,
-      numBuckets, keyCol = bucketKey) { both =>
-      val cntCols = both.columns
-        .filterNot(c => keyCols.contains(c) || c == "__bucket")
-      both.groupBy(keyCols.map(col): _*)
-        .agg(sum(col(cntCols.head)).as(cntCols.head),
-          cntCols.tail.map(c => sum(col(c)).as(c)): _*)
-    }
+      numBuckets, keyCol = bucketKey)(sumByKeys(_, keyCols))
+  }
 
   /** The committed bucketed census (union of bucket latests). */
   def latestBucketed(spark: SparkSession, censusDir: String): Option[DataFrame] =
@@ -96,9 +96,10 @@ object StreamingAdditiveCensus {
     * batch census (e.g. `QuantileSketch.census(_, col("n_chars"),
     * Seq("source"))`), which folds into the chain. After each commit
     * `onCensus` gets the updated census and the batch id; it must
-    * materialize the frame before returning (the GC window deletes that
-    * version two batches later — the [[StreamingSpanCensus.start]]
-    * contract). */
+    * materialize the frame before returning (the [[VersionedState]] GC
+    * contract). Each batch's census, fold and `onCensus` run in one
+    * [[graft.CacheBarriers.withScope]], so barriers a census registers
+    * ([[graft.llm.Dedup.spanCensus]]'s two) are freed per batch. */
   def start(rows: DataFrame, censusDir: String, checkpointDir: String,
             censusOf: DataFrame => DataFrame, keyCols: Seq[String],
             onCensus: (DataFrame, Long) => Unit = (_, _) => (),
@@ -108,8 +109,10 @@ object StreamingAdditiveCensus {
       .outputMode("append")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(censusOf(batch), batchId, censusDir, keyCols)
-        onCensus(latest(batch.sparkSession, censusDir).get, batchId)
+        graft.CacheBarriers.withScope {
+          mergeBatch(censusOf(batch), batchId, censusDir, keyCols)
+          onCensus(latest(batch.sparkSession, censusDir).get, batchId)
+        }
       }
       .start()
 }

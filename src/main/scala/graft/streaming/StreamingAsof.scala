@@ -9,11 +9,7 @@ import graft.operators.AsofJoin
 /** Continuous point-in-time enrichment: maintain the latest-right-per-key
   * state ([[AsofJoin.asofBackwardIncremental]]) as a mixed event stream
   * arrives, shipping each micro-batch's matched left rows downstream —
-  * the durable twin of the q202 fold chain, riding the same
-  * [[VersionedState]] parquet protocol as the census streams: a replayed
-  * batch recomputes its version from the predecessor state (idempotent),
-  * `_SUCCESS` commits keep torn writes invisible, and the stale-
-  * checkpoint guard fails loudly.
+  * the durable twin of the q202 fold chain on [[VersionedState.advance]].
   *
   * Ordering contract: `onMatched` runs BEFORE the state commit — a
   * failed sink means the batch replays and the state never gets ahead of
@@ -44,33 +40,18 @@ object StreamingAsof {
                 prefix: String = "asof_",
                 onMatched: (DataFrame, Long) => Unit = (_, _) => ()): Unit =
     graft.CacheBarriers.withScope {
-      val spark = batch.sparkSession
-      val vs = VersionedState.versions(spark, stateDir)
-      VersionedState.requireNoNewerThan(vs, stateDir, batchId)
-      val rb = rights(batch)
-      val prev = vs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$stateDir/v$v"))
-        .getOrElse(AsofJoin.emptyState(rb))
-      val (matched, state) = AsofJoin.asofBackwardIncremental(
-        lefts(batch), rb, prev, keyCols, col(leftTsCol), col(rightTsCol),
-        rightTie, toleranceUs, prefix)
-      onMatched(matched, batchId)
-      state.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-      VersionedState.gcBefore(spark, stateDir, batchId, vs)
+      VersionedState.advance(batch.sparkSession, stateDir, batchId) { prev =>
+        val rb = rights(batch)
+        val (matched, state) = AsofJoin.asofBackwardIncremental(
+          lefts(batch), rb, prev.getOrElse(AsofJoin.emptyState(rb)),
+          keyCols, col(leftTsCol), col(rightTsCol), rightTie, toleranceUs,
+          prefix)
+        onMatched(matched, batchId)
+        state
+      }
     }
 
   // ── The 100 TB state shape ──────────────────────────────────────────
-
-  /** Per-touched-bucket latest state strictly below `maxExcl` — reads
-    * ONLY the listed buckets' chains. */
-  private def touchedStateBefore(spark: SparkSession, stateDir: String,
-                                 buckets: Seq[Long],
-                                 maxExcl: Long): Option[DataFrame] =
-    buckets.flatMap { b =>
-      val d = s"$stateDir/b$b"
-      VersionedState.versions(spark, d).find(_ < maxExcl)
-        .map(v => spark.read.parquet(s"$d/v$v"))
-    }.reduceOption(_.unionByName(_))
 
   /** [[foldBatch]] in the [[BucketedState]] layout — the latest-rights
     * state is KEY-cardinality, so the global chain's whole-table rewrite
@@ -92,15 +73,12 @@ object StreamingAsof {
                         prefix: String = "asof_",
                         onMatched: (DataFrame, Long) => Unit = (_, _) => ())
       : Unit = graft.CacheBarriers.withScope {
-    val spark = batch.sparkSession
-    BucketedState.ensureMeta(spark, stateDir, numBuckets)
+    BucketedState.ensureMeta(batch.sparkSession, stateDir, numBuckets)
     val lb = graft.CacheBarriers.barrier(lefts(batch))
     val rb = graft.CacheBarriers.barrier(rights(batch))
-    val touched = lb.select(col(keyCol)).unionByName(rb.select(col(keyCol)))
-      .select(BucketedState.bucketOf(col(keyCol), numBuckets).as("b"))
-      .filter(col("b").isNotNull).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val prev = touchedStateBefore(spark, stateDir, touched.toSeq, batchId)
+    val prev = BucketedState.touchedBefore(stateDir,
+        lb.select(col(keyCol)).unionByName(rb.select(col(keyCol))),
+        numBuckets, batchId)
       .getOrElse(AsofJoin.emptyState(rb))
     val (matched, state) = AsofJoin.asofBackwardIncremental(
       lb, rb, prev, Seq(keyCol), col(leftTsCol), col(rightTsCol),

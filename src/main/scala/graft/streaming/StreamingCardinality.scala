@@ -14,10 +14,7 @@ import graft.llm.Cardinality
   * and IDEMPOTENT, the strongest merge law in the streaming family: a
   * replayed batch folds to the very same registers even if it were
   * double-merged. The [[VersionedState]] chain is kept anyway, for the
-  * family's uniform crash story (torn writes invisible behind `_SUCCESS`,
-  * stale-checkpoint guard raising loudly) and because the version walk is
-  * what lets a replay recompute FROM THE PREDECESSOR rather than rely on
-  * idempotence.
+  * family's uniform crash story.
   *
   * No bucketed form: the state is ≤ M·|groups| rows — config-sized (the
   * "census stays global" regime), never data-sized, which is the entire
@@ -38,22 +35,14 @@ object StreamingCardinality {
   /** Idempotent fold of one micro-batch of documents into the registers. */
   def foldBatch(batch: DataFrame, batchId: Long, stateDir: String,
                 groupCol: String = "source", textCol: String = "text"): Unit = {
-    val spark = batch.sparkSession
-    val vs = VersionedState.versions(spark, stateDir)
-    VersionedState.requireNoNewerThan(vs, stateDir, batchId)
     val bs = Cardinality.wordSketch(batch, groupCol, textCol)
-    val merged = vs.find(_ < batchId)
-      .map(v => spark.read.parquet(s"$stateDir/v$v"))
-      .map(prev => Cardinality.mergeSketches(prev, bs, Seq(groupCol)))
-      .getOrElse(bs)
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    VersionedState.gcBefore(spark, stateDir, batchId, vs)
+    VersionedState.advance(batch.sparkSession, stateDir, batchId)(
+      _.map(Cardinality.mergeSketches(_, bs, Seq(groupCol))).getOrElse(bs))
   }
 
   /** Start the stream; after each fold commits, `onEstimate` gets the
     * updated per-group estimate and the batch id. It must materialize the
-    * frame before returning (the GC window deletes the version two
-    * batches later — the [[StreamingDfCensus.start]] contract). */
+    * frame before returning (the [[VersionedState]] GC contract). */
   def start(docs: DataFrame, stateDir: String, checkpointDir: String,
             onEstimate: (DataFrame, Long) => Unit = (_, _) => (),
             groupCol: String = "source", textCol: String = "text",

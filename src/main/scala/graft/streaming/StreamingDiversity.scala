@@ -34,22 +34,16 @@ object StreamingDiversity {
   /** Idempotent fold of one micro-batch of vectors into the kept-state. */
   def foldBatch(batch: DataFrame, batchId: Long, stateDir: String,
                 centroids: Array[Centroid], cap: Int, keepCentral: Boolean,
-                idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    val vs = VersionedState.versions(spark, stateDir)
-    VersionedState.requireNoNewerThan(vs, stateDir, batchId)
-    val prev = vs.find(_ < batchId)
-      .map(v => spark.read.parquet(s"$stateDir/v$v"))
-      .getOrElse(Similarity.emptyDiversityState(spark))
-    Similarity.diversitySampleIncremental(batch, prev, centroids, cap,
-        keepCentral, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    VersionedState.gcBefore(spark, stateDir, batchId, vs)
-  }
+                idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    VersionedState.advance(batch.sparkSession, stateDir, batchId) { prev =>
+      Similarity.diversitySampleIncremental(batch,
+        prev.getOrElse(Similarity.emptyDiversityState(batch.sparkSession)),
+        centroids, cap, keepCentral, idCol, vecCol)
+    }
 
   /** Start the stream; after each fold commits, `onSample` gets the
     * ranked sample and the batch id (materialize before returning — the
-    * [[StreamingDfCensus.start]] GC contract). */
+    * [[VersionedState]] GC contract). */
   def start(vecs: DataFrame, stateDir: String, checkpointDir: String,
             centroids: Array[Centroid], cap: Int, keepCentral: Boolean,
             onSample: (DataFrame, Long) => Unit = (_, _) => (),

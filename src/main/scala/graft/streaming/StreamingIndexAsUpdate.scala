@@ -54,9 +54,10 @@ object StreamingIndexAsUpdate {
   /** Fail loudly when `stateDir` holds state written under a different
     * partial-row layout; stamp the marker on a virgin dir iff `stamp`.
     * (A dir with committed versions but NO marker predates the marker
-    * protocol — treated as the older layout.) */
+    * protocol — treated as the older layout; only an unmarked dir pays
+    * that listing.) */
   private def checkLayout(spark: SparkSession, stateDir: String,
-                          vs: Seq[Long], stamp: Boolean): Unit = {
+                          stamp: Boolean): Unit = {
     val f = VersionedState.fs(spark, stateDir)
     val p = new org.apache.hadoop.fs.Path(stateDir, LayoutMarker)
     def fail(found: String): Nothing = throw new IllegalStateException(
@@ -70,7 +71,7 @@ object StreamingIndexAsUpdate {
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
         finally in.close()
       if (got != LayoutVersion) fail(got)
-    } else if (vs.nonEmpty) {
+    } else if (VersionedState.versions(spark, stateDir).nonEmpty) {
       fail("<unmarked, pre-iau-2>")
     } else if (stamp) {
       val out = f.create(p, true)
@@ -142,15 +143,10 @@ object StreamingIndexAsUpdate {
   def mergeBatch(batch: DataFrame, batchId: Long, stateDir: String,
                  fields: Seq[String]): Unit = {
     val spark = batch.sparkSession
-    val vs = VersionedState.versions(spark, stateDir)
-    checkLayout(spark, stateDir, vs, stamp = true)
-    VersionedState.requireNoNewerThan(vs, stateDir, batchId)
+    checkLayout(spark, stateDir, stamp = true)
     val part = partials(batch, fields)
-    val prev = vs.find(_ < batchId)
-      .map(v => spark.read.parquet(s"$stateDir/v$v"))
-    val merged = prev.map(p => combine(p.unionByName(part))).getOrElse(part)
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    VersionedState.gcBefore(spark, stateDir, batchId, vs)
+    VersionedState.advance(spark, stateDir, batchId)(
+      _.map(p => combine(p.unionByName(part))).getOrElse(part))
   }
 
   /** Continuous doc-as-upsert: envelope stream → optional transform →
@@ -177,9 +173,8 @@ object StreamingIndexAsUpdate {
     * [[StreamingUpsert.liveState]] for the fixed-schema contrast). */
   def mergedState(spark: SparkSession, stateDir: String,
                   fields: Seq[String]): Option[DataFrame] = {
-    val vs = VersionedState.versions(spark, stateDir)
-    checkLayout(spark, stateDir, vs, stamp = false)
-    vs.headOption
-      .map(v => finish(spark.read.parquet(s"$stateDir/v$v"), fields))
+    checkLayout(spark, stateDir, stamp = false)
+    VersionedState.tableBefore(spark, stateDir, Long.MaxValue)
+      .map(finish(_, fields))
   }
 }

@@ -13,11 +13,8 @@ import graft.operators.EventAnalytics
   * user: (ts, tie, type) arrays) that stitches boundary-crossing runs,
   * and the additive (path, n) census the report reads.
   *
-  * Both chains are replay-idempotent independently: a replayed batch
-  * recomputes its version from each chain's predecessor STRICTLY below
-  * the batch id. The census commits FIRST (delivery-before-state,
-  * [[StreamingSessionize]]'s ordering): a failure between the commits
-  * replays into identical artifacts.
+  * Both chains ride [[VersionedState.advance]], the census nested inside
+  * the state's fold so it commits FIRST (delivery-before-state).
   *
   * Micro-batches must be time-partitioned per user in (ts, tie) order —
   * the operator's raise_error enforces it row-lazily, including on an
@@ -42,28 +39,23 @@ object StreamingPathCensus {
                 tieCol: String = "event_id"): Unit =
     graft.CacheBarriers.withScope {
       val spark = batch.sparkSession
-      val svs = VersionedState.versions(spark, stateDir)
-      VersionedState.requireNoNewerThan(svs, stateDir, batchId)
-      val prev = svs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$stateDir/v$v"))
+      VersionedState.advance(spark, stateDir, batchId) { prev =>
         // the empty state's tie/user types come from THIS batch's
         // schema — a hardcoded default would make the first fold of a
         // non-long tie (or user) column an AnalysisException
-        .getOrElse(EventAnalytics.emptyPathState(spark, userCol,
-          batch.schema(tieCol).dataType, batch.schema(userCol).dataType))
-      val (delta, state) = EventAnalytics.pathCensusIncremental(
-        batch, prev, k, tsUs(batch), userCol, typeCol, tieCol)
-      val cvs = VersionedState.versions(spark, censusDir)
-      VersionedState.requireNoNewerThan(cvs, censusDir, batchId)
-      val census = cvs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$censusDir/v$v"))
-        .map(EventAnalytics.mergePathCounts(_, delta))
-        .getOrElse(delta)
-      census.write.mode("overwrite").parquet(s"$censusDir/v$batchId")
-      VersionedState.gcBefore(spark, censusDir, batchId, cvs)
-      state.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-      VersionedState.gcBefore(spark, stateDir, batchId, svs)
+        val (delta, state) = EventAnalytics.pathCensusIncremental(batch,
+          prev.getOrElse(EventAnalytics.emptyPathState(spark, userCol,
+            batch.schema(tieCol).dataType, batch.schema(userCol).dataType)),
+          k, tsUs(batch), userCol, typeCol, tieCol)
+        mergeCensus(spark, censusDir, batchId, delta)
+        state
+      }
     }
+
+  private def mergeCensus(spark: SparkSession, censusDir: String,
+                          batchId: Long, delta: DataFrame): Unit =
+    VersionedState.advance(spark, censusDir, batchId)(
+      _.map(EventAnalytics.mergePathCounts(_, delta)).getOrElse(delta))
 
   // ── The 100 TB state shape ────────────────────────────────────────────
 
@@ -89,27 +81,13 @@ object StreamingPathCensus {
       val spark = batch.sparkSession
       BucketedState.ensureMeta(spark, stateDir, numBuckets)
       val events = graft.CacheBarriers.barrier(batch)
-      val touched = events
-        .select(BucketedState.bucketOf(col(userCol), numBuckets).as("b"))
-        .filter(col("b").isNotNull).distinct()
-        .collect().map(_.getLong(0)).sorted
-      val prev = touched.toSeq.flatMap { b =>
-        val d = s"$stateDir/b$b"
-        VersionedState.versions(spark, d).find(_ < batchId)
-          .map(v => spark.read.parquet(s"$d/v$v"))
-      }.reduceOption(_.unionByName(_))
+      val prev = BucketedState.touchedBefore(stateDir,
+          events.select(col(userCol)), numBuckets, batchId)
         .getOrElse(EventAnalytics.emptyPathState(spark, userCol,
           events.schema(tieCol).dataType, events.schema(userCol).dataType))
       val (delta, state) = EventAnalytics.pathCensusIncremental(
         events, prev, k, tsUs(events), userCol, typeCol, tieCol)
-      val cvs = VersionedState.versions(spark, censusDir)
-      VersionedState.requireNoNewerThan(cvs, censusDir, batchId)
-      val census = cvs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$censusDir/v$v"))
-        .map(EventAnalytics.mergePathCounts(_, delta))
-        .getOrElse(delta)
-      census.write.mode("overwrite").parquet(s"$censusDir/v$batchId")
-      VersionedState.gcBefore(spark, censusDir, batchId, cvs)
+      mergeCensus(spark, censusDir, batchId, delta)
       BucketedState.mergeBatchWith(
         state.select(col(userCol), col("tail_ts"), col("tail_tie"),
           col("tail_type")),

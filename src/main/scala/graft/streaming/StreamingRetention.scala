@@ -41,29 +41,19 @@ object StreamingRetention {
                 userCol: String = "user_id"): Unit =
     graft.CacheBarriers.withScope {
       val spark = batch.sparkSession
-      val svs = VersionedState.versions(spark, stateDir)
-      VersionedState.requireNoNewerThan(svs, stateDir, batchId)
-      val prev = svs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$stateDir/v$v"))
-        .getOrElse(EventAnalytics.emptyActiveState(spark))
-      val (delta, state) = EventAnalytics.retentionCohortsIncremental(
-        batch, prev, tsUs(batch), userCol)
-      mergeCensus(spark, censusDir, batchId, delta)
-      state.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-      VersionedState.gcBefore(spark, stateDir, batchId, svs)
+      VersionedState.advance(spark, stateDir, batchId) { prev =>
+        val (delta, state) = EventAnalytics.retentionCohortsIncremental(
+          batch, prev.getOrElse(EventAnalytics.emptyActiveState(spark)),
+          tsUs(batch), userCol)
+        mergeCensus(spark, censusDir, batchId, delta)
+        state
+      }
     }
 
   private def mergeCensus(spark: SparkSession, censusDir: String,
-                          batchId: Long, delta: DataFrame): Unit = {
-    val cvs = VersionedState.versions(spark, censusDir)
-    VersionedState.requireNoNewerThan(cvs, censusDir, batchId)
-    val census = cvs.find(_ < batchId)
-      .map(v => spark.read.parquet(s"$censusDir/v$v"))
-      .map(EventAnalytics.mergeRetentionCells(_, delta))
-      .getOrElse(delta)
-    census.write.mode("overwrite").parquet(s"$censusDir/v$batchId")
-    VersionedState.gcBefore(spark, censusDir, batchId, cvs)
-  }
+                          batchId: Long, delta: DataFrame): Unit =
+    VersionedState.advance(spark, censusDir, batchId)(
+      _.map(EventAnalytics.mergeRetentionCells(_, delta)).getOrElse(delta))
 
   /** [[foldBatch]] with the user×day-cardinality state bucketed by
     * USER: the batch reads only the buckets its users hash into (their
@@ -79,14 +69,8 @@ object StreamingRetention {
       BucketedState.ensureMeta(spark, stateDir, numBuckets)
       val pairs = graft.CacheBarriers.barrier(
         EventAnalytics.activityPairs(batch, tsUs(batch), userCol))
-      val touched = pairs
-        .select(BucketedState.bucketOf(col("__u"), numBuckets).as("b"))
-        .distinct().collect().map(_.getLong(0)).sorted
-      val slice = touched.toSeq.flatMap { b =>
-        val d = s"$stateDir/b$b"
-        VersionedState.versions(spark, d).find(_ < batchId)
-          .map(v => spark.read.parquet(s"$d/v$v"))
-      }.reduceOption(_.unionByName(_))
+      val slice = BucketedState.touchedBefore(stateDir,
+          pairs.select(col("__u")), numBuckets, batchId)
         .getOrElse(EventAnalytics.emptyActiveState(spark))
       val (delta, fresh) = EventAnalytics.retentionDeltaFrom(pairs, slice)
       mergeCensus(spark, censusDir, batchId, delta)

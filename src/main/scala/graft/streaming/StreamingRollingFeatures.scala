@@ -9,9 +9,7 @@ import graft.operators.EventAnalytics
 /** Continuous rolling-feature computation: maintain the window-bounded
   * event state ([[EventAnalytics.rollingFeaturesIncremental]]) as events
   * stream in, shipping each micro-batch's featurized rows downstream —
-  * the durable twin of the q206 fold chain on the [[VersionedState]]
-  * parquet protocol (idempotent replay against the predecessor version,
-  * `_SUCCESS` commits, loud stale-checkpoint guard).
+  * the durable twin of the q206 fold chain on [[VersionedState.advance]].
   *
   * Ordering contract: `onFeatures` runs BEFORE the state commit —
   * features are delivered at-least-once and the state never gets ahead
@@ -35,28 +33,18 @@ object StreamingRollingFeatures {
                 onFeatures: (DataFrame, Long) => Unit = (_, _) => ()): Unit =
     graft.CacheBarriers.withScope {
       val spark = batch.sparkSession
-      val vs = VersionedState.versions(spark, stateDir)
-      VersionedState.requireNoNewerThan(vs, stateDir, batchId)
-      val prev = vs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$stateDir/v$v"))
-        .getOrElse(EventAnalytics.emptyRollingState(spark, userCol, tieCol))
-      val (features, state) = EventAnalytics.rollingFeaturesIncremental(
-        batch, prev, tsUs(batch), valueCol(batch), windows, userCol, tieCol)
-      onFeatures(features, batchId)
-      state.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-      VersionedState.gcBefore(spark, stateDir, batchId, vs)
+      VersionedState.advance(spark, stateDir, batchId) { prev =>
+        val (features, state) = EventAnalytics.rollingFeaturesIncremental(
+          batch,
+          prev.getOrElse(EventAnalytics.emptyRollingState(spark, userCol,
+            tieCol)),
+          tsUs(batch), valueCol(batch), windows, userCol, tieCol)
+        onFeatures(features, batchId)
+        state
+      }
     }
 
   // ── The 100 TB state shape ──────────────────────────────────────────
-
-  private def touchedStateBefore(spark: SparkSession, stateDir: String,
-                                 buckets: Seq[Long],
-                                 maxExcl: Long): Option[DataFrame] =
-    buckets.flatMap { b =>
-      val d = s"$stateDir/b$b"
-      VersionedState.versions(spark, d).find(_ < maxExcl)
-        .map(v => spark.read.parquet(s"$d/v$v"))
-    }.reduceOption(_.unionByName(_))
 
   /** [[foldBatch]] in the [[BucketedState]] layout — the state is
     * key-cardinality (a gap anchor per user) plus a window of recent
@@ -82,11 +70,8 @@ object StreamingRollingFeatures {
     BucketedState.ensureMeta(spark, stateDir, numBuckets)
     val maxW = windows.map(_._2).max
     val b = graft.CacheBarriers.barrier(batch)
-    val touched = b
-      .select(BucketedState.bucketOf(col(userCol), numBuckets).as("b"))
-      .filter(col("b").isNotNull).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val prev = touchedStateBefore(spark, stateDir, touched.toSeq, batchId)
+    val prev = BucketedState.touchedBefore(stateDir, b.select(col(userCol)),
+        numBuckets, batchId)
       .getOrElse(EventAnalytics.emptyRollingState(spark, userCol, tieCol))
     val (features, state) = EventAnalytics.rollingFeaturesIncremental(
       b, prev, tsUs(b), valueCol(b), windows, userCol, tieCol)

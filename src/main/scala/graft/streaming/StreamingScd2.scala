@@ -9,9 +9,7 @@ import graft.operators.Scd2
 /** Continuous SCD2 dimension versioning: maintain the one-row-per-key
   * open-interval state ([[Scd2.intervalsIncremental]]) as change events
   * stream in, shipping each micro-batch's CLOSED intervals downstream —
-  * the durable twin of the q209 fold chain on the [[VersionedState]]
-  * parquet protocol (idempotent replay against the predecessor version,
-  * `_SUCCESS` commits, loud stale-checkpoint guard).
+  * the durable twin of the q209 fold chain on [[VersionedState.advance]].
   *
   * Ordering contract: `onClosed` runs BEFORE the state commit — closed
   * intervals are delivered at-least-once and the state never gets ahead
@@ -33,28 +31,16 @@ object StreamingScd2 {
                 onClosed: (DataFrame, Long) => Unit = (_, _) => ()): Unit =
     graft.CacheBarriers.withScope {
       val spark = batch.sparkSession
-      val vs = VersionedState.versions(spark, stateDir)
-      VersionedState.requireNoNewerThan(vs, stateDir, batchId)
-      val prev = vs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$stateDir/v$v"))
-        .getOrElse(Scd2.emptyState(spark, keyCols, tieCol))
-      val (closed, state) = Scd2.intervalsIncremental(
-        batch, prev, keyCols, tsUs(batch), valueCol(batch), tieCol)
-      onClosed(closed, batchId)
-      state.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-      VersionedState.gcBefore(spark, stateDir, batchId, vs)
+      VersionedState.advance(spark, stateDir, batchId) { prev =>
+        val (closed, state) = Scd2.intervalsIncremental(batch,
+          prev.getOrElse(Scd2.emptyState(spark, keyCols, tieCol)), keyCols,
+          tsUs(batch), valueCol(batch), tieCol)
+        onClosed(closed, batchId)
+        state
+      }
     }
 
   // ── The 100 TB state shape ──────────────────────────────────────────
-
-  private def touchedStateBefore(spark: SparkSession, stateDir: String,
-                                 buckets: Seq[Long],
-                                 maxExcl: Long): Option[DataFrame] =
-    buckets.flatMap { b =>
-      val d = s"$stateDir/b$b"
-      VersionedState.versions(spark, d).find(_ < maxExcl)
-        .map(v => spark.read.parquet(s"$d/v$v"))
-    }.reduceOption(_.unionByName(_))
 
   /** [[foldBatch]] in the [[BucketedState]] layout — key-cardinality
     * state, so a batch reads and commits ONLY the buckets its keys hash
@@ -73,11 +59,8 @@ object StreamingScd2 {
     val spark = batch.sparkSession
     BucketedState.ensureMeta(spark, stateDir, numBuckets)
     val b = graft.CacheBarriers.barrier(batch)
-    val touched = b
-      .select(BucketedState.bucketOf(col(keyCol), numBuckets).as("b"))
-      .filter(col("b").isNotNull).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val prev = touchedStateBefore(spark, stateDir, touched.toSeq, batchId)
+    val prev = BucketedState.touchedBefore(stateDir, b.select(col(keyCol)),
+        numBuckets, batchId)
       .getOrElse(Scd2.emptyState(spark, Seq(keyCol), tieCol))
     val (closed, state) = Scd2.intervalsIncremental(
       b, prev, Seq(keyCol), tsUs(b), valueCol(b), tieCol)

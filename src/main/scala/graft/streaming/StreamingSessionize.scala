@@ -9,15 +9,11 @@ import graft.operators.Sessionize
 /** Continuous sessionization: maintain the per-user OPEN-session state
   * ([[Sessionize.sessionStatsIncremental]]) as events stream in, shipping
   * each micro-batch's CLOSED sessions downstream — the durable twin of
-  * the q141 fold chain, riding the same [[VersionedState]] parquet
-  * protocol as the census streams: a replayed batch recomputes its
-  * version from the predecessor state (idempotent), `_SUCCESS` commits
-  * keep torn writes invisible, and the stale-checkpoint guard fails
-  * loudly.
+  * the q141 fold chain on [[VersionedState.advance]].
   *
   * Ordering contract: `onClosed` runs BEFORE the state commit — a failed
   * sink means the batch replays and no state exists for unshipped
-  * sessions (the [[StreamingSpanCensus]] cut ordering), so closed
+  * sessions (the [[StreamingSpanCensus.cutBatch]] ordering), so closed
   * sessions are delivered at-least-once and the state never gets ahead
   * of the deliveries. Micro-batches must be time-partitioned per user
   * (an append-only event log in arrival order); the operator's
@@ -38,37 +34,22 @@ object StreamingSessionize {
                 onClosed: (DataFrame, Long) => Unit = (_, _) => ()): Unit =
     graft.CacheBarriers.withScope {
       val spark = batch.sparkSession
-      val vs = VersionedState.versions(spark, stateDir)
-      VersionedState.requireNoNewerThan(vs, stateDir, batchId)
-      val prev = vs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$stateDir/v$v"))
-        .getOrElse(Sessionize.emptySessionState(spark, userCol))
-      val (closed, state) = Sessionize.sessionStatsIncremental(
-        batch, prev, gapUs, tsUs(batch), userCol, tieCol)
-      onClosed(closed, batchId)
-      state.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-      VersionedState.gcBefore(spark, stateDir, batchId, vs)
+      VersionedState.advance(spark, stateDir, batchId) { prev =>
+        val (closed, state) = Sessionize.sessionStatsIncremental(batch,
+          prev.getOrElse(Sessionize.emptySessionState(spark, userCol)),
+          gapUs, tsUs(batch), userCol, tieCol)
+        onClosed(closed, batchId)
+        state
+      }
     }
 
   // ── The 100 TB state shape ────────────────────────────────────────────
 
-  /** Per-touched-bucket latest state strictly below `maxExcl` — reads
-    * ONLY the listed buckets' chains (the partition-pruned read the
-    * bucketed layout exists for). */
-  private def touchedStateBefore(spark: SparkSession, stateDir: String,
-                                 buckets: Seq[Long],
-                                 maxExcl: Long): Option[DataFrame] =
-    buckets.flatMap { b =>
-      val d = s"$stateDir/b$b"
-      VersionedState.versions(spark, d).find(_ < maxExcl)
-        .map(v => spark.read.parquet(s"$d/v$v"))
-    }.reduceOption(_.unionByName(_))
-
   /** [[foldBatch]] in the [[BucketedState]] layout — the open-session
     * state is USER-cardinality (billions of rows at web scale), so the
-    * whole-table rewrite of the global chain has exactly the flaw the
-    * line census had before its bucketed form: a micro-batch touching a
-    * sliver of users rewrites everything. Here the batch reads ONLY the
+    * whole-table rewrite of the global chain has the flaw the bucketed
+    * stores exist for: a micro-batch touching a sliver of users rewrites
+    * everything. Here the batch reads ONLY the
     * buckets its users hash into, stitches via the same
     * [[Sessionize.sessionStatsIncremental]], and commits per-bucket
     * versions through [[BucketedState.mergeBatchWith]] with a per-user
@@ -91,11 +72,8 @@ object StreamingSessionize {
     BucketedState.ensureMeta(spark, stateDir, numBuckets)
     val events = graft.CacheBarriers.barrier(
       batch.withColumn("__t", tsUs(batch)))
-    val touched = events
-      .select(BucketedState.bucketOf(col(userCol), numBuckets).as("b"))
-      .filter(col("b").isNotNull).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val prev = touchedStateBefore(spark, stateDir, touched.toSeq, batchId)
+    val prev = BucketedState.touchedBefore(stateDir,
+        events.select(col(userCol)), numBuckets, batchId)
       .getOrElse(Sessionize.emptySessionState(spark, userCol))
     val (closed, state) = Sessionize.sessionStatsIncremental(
       events, prev, gapUs, col("__t"), userCol, tieCol)

@@ -1,101 +1,59 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.llm.Dedup
 
-/** Continuous duplicated-span census: maintain the persisted (g, n_docs)
-  * artifact ([[Dedup.spanCensus]]) as documents stream in, so incremental
-  * span scoring ([[Dedup.dupSpanStatsIncremental]]) always reads a
-  * current census without re-reading the old corpus. Per-gram distinct-doc
-  * counts are additive across doc-disjoint batches
-  * ([[Dedup.mergeSpanCensus]]), so each micro-batch costs its own census
-  * plus a census-sized merge — and, in the bucketed form, only the
-  * buckets its own grams hash into.
+/** Continuous span dedup: each micro-batch is span-CUT against the
+  * persisted (g, n_docs) census ([[Dedup.spanCensus]]) of everything
+  * before it, and the merged census commits as the batch's version — so
+  * the stream emits deduplicated text while maintaining the artifact
+  * that scores the next batch, never re-reading the old corpus. The
+  * census alone (no cut) folds through [[StreamingAdditiveCensus]] with
+  * `censusOf = Dedup.spanCensus(_, k)` and `keyCols = Seq("g")`.
   *
-  * This is the repo's standard artifact treatment applied to its LARGEST
-  * artifact: the span census is corpus-gram-sized (≈ one row per distinct
-  * k-word window in the corpus — bigger than the line census by the
-  * window/line ratio), which is exactly why the global whole-rewrite
-  * [[mergeBatch]] form is only right while the census fits a few GB and
-  * the [[mergeBatchBucketed]] form is the 100 TB shape.
-  *
-  * State lives in a [[VersionedState]] parquet chain (`<dir>/v<batchId>`):
-  * a REPLAYED batch recomputes its version from the predecessor state
-  * rather than double-merging, the `_SUCCESS` commit protocol keeps torn
-  * writes invisible, and the stale-checkpoint guard fails loudly instead
-  * of resurrecting old counts. Contracts carried over from the line
-  * census: batches are doc-id-DISJOINT (append-only corpus — a doc in two
-  * batches double-counts its grams), and every batch must use the SAME
-  * window width `k` (the census has no per-row k; mixing widths silently
-  * unions incomparable gram spaces).
+  * Contracts: batches are doc-id-DISJOINT (append-only corpus — a doc in
+  * two batches double-counts its grams), and every batch must use the
+  * SAME window width `k` (the census has no per-row k; mixing widths
+  * silently unions incomparable gram spaces).
   */
 object StreamingSpanCensus {
 
-  /** The current committed census (g, n_docs), if any batch committed. */
-  def latestCensus(spark: SparkSession, censusDir: String): Option[DataFrame] =
-    StreamingUpsert.latestState(spark, censusDir)
-
-  /** Idempotent fold of one micro-batch of documents into the census.
-    * One directory listing serves the guard, the predecessor lookup, and
-    * the GC — the same single-listing shape as the other merge paths. */
-  def mergeBatch(batch: DataFrame, batchId: Long, censusDir: String,
-                 k: Int = 8, idCol: String = "doc_id",
-                 textCol: String = "text"): Unit =
-    // withScope: spanCensus registers the batch's windowed/positional
-    // barriers — scoped so a long-lived stream doesn't accrete one
-    // cached pair per micro-batch (everything is on storage on exit)
-    graft.CacheBarriers.withScope {
-      val spark = batch.sparkSession
-      val vs = VersionedState.versions(spark, censusDir)
-      VersionedState.requireNoNewerThan(vs, censusDir, batchId)
-      val batchCensus = Dedup.spanCensus(batch, k, idCol, textCol)
-      val merged = vs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$censusDir/v$v"))
-        .map(prev => Dedup.mergeSpanCensus(prev, batchCensus))
-        .getOrElse(batchCensus)
-      merged.write.mode("overwrite").parquet(s"$censusDir/v$batchId")
-      VersionedState.gcBefore(spark, censusDir, batchId, vs)
-    }
-
-  /** Idempotent cut-and-fold of one micro-batch: the batch is span-CUT
+  /** Idempotent cut-and-fold of one micro-batch on
+    * [[VersionedState.advance]]: the batch is cut
     * ([[Dedup.cutDupSpansIncremental]]) against the predecessor census
     * plus itself, the cut rows go to `onCut`, and the merged census
-    * commits as this batch's version — so the stream continuously emits
-    * deduplicated text while maintaining the artifact that scores the
-    * next batch. A replayed batch recomputes BOTH from the same
-    * predecessor state, so the cut output and the census version are
-    * bit-identical on re-delivery (the same idempotence argument as
-    * [[mergeBatch]]; StreamingSpanCensusSpec pins it kill+resume).
-    * `onCut` must materialize its frame before returning — it reads
-    * census versions the GC deletes two batches later, and it runs
-    * BEFORE the census commit so a failed sink replays the whole batch
-    * rather than committing state for rows that were never written. */
+    * commits. A replayed batch recomputes BOTH from the same predecessor,
+    * so the cut output and the census version are bit-identical on
+    * re-delivery (StreamingSpanCensusSpec pins it kill+resume). `onCut`
+    * runs BEFORE the census commit, so a failed sink replays the whole
+    * batch rather than committing state for rows that were never
+    * written; it must materialize its frame before returning. */
   def cutBatch(batch: DataFrame, batchId: Long, censusDir: String,
                onCut: (DataFrame, Long) => Unit,
                k: Int = 8, idCol: String = "doc_id",
                textCol: String = "text"): Unit =
+    // withScope: the cut registers the batch's windowed/positional
+    // barriers — scoped so a long-lived stream doesn't accrete one
+    // cached pair per micro-batch
     graft.CacheBarriers.withScope {
-      val spark = batch.sparkSession
-      val vs = VersionedState.versions(spark, censusDir)
-      VersionedState.requireNoNewerThan(vs, censusDir, batchId)
-      val (cut, merged) = vs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$censusDir/v$v")) match {
-          case Some(prev) =>
-            Dedup.cutDupSpansIncremental(batch, prev, k, idCol, textCol)
+      VersionedState.advance(batch.sparkSession, censusDir, batchId) { prev =>
+        val (cut, merged) = prev match {
+          case Some(p) =>
+            Dedup.cutDupSpansIncremental(batch, p, k, idCol, textCol)
           case None =>
             // first batch: no old corpus — the batch cut against itself
             // IS the batch operator, and its census seeds the chain
             (Dedup.cutDupSpans(batch, k, idCol, textCol),
               Dedup.spanCensus(batch, k, idCol, textCol))
         }
-      onCut(cut, batchId)
-      merged.write.mode("overwrite").parquet(s"$censusDir/v$batchId")
-      VersionedState.gcBefore(spark, censusDir, batchId, vs)
+        onCut(cut, batchId)
+        merged
+      }
     }
 
-  /** [[start]]'s cut-emitting sibling: continuous span dedup. */
+  /** Start the stream: continuous span dedup. */
   def startCut(docs: DataFrame, censusDir: String, checkpointDir: String,
                onCut: (DataFrame, Long) => Unit,
                k: Int = 8, idCol: String = "doc_id",
@@ -107,52 +65,6 @@ object StreamingSpanCensus {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         cutBatch(batch, batchId, censusDir, onCut, k, idCol, textCol)
-      }
-      .start()
-
-  /** The 100 TB census shape: the census bucketed by `hash(g)`
-    * ([[BucketedState]]'s layout with an ADDITIVE combine), so a batch
-    * rewrites only the buckets its own grams hash into — at web scale
-    * the census is billions of gram rows and a daily batch touches a
-    * sliver. Same versioned-merge idempotence per bucket (sums are
-    * mergeable partials), same `_meta` bucket-count pin, same
-    * doc-disjoint and same-k contracts as the global path. */
-  def mergeBatchBucketed(batch: DataFrame, batchId: Long, censusDir: String,
-                         numBuckets: Int = 64, k: Int = 8,
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): Unit =
-    graft.CacheBarriers.withScope {
-      import org.apache.spark.sql.functions.{col, sum}
-      BucketedState.mergeBatchWith(
-        Dedup.spanCensus(batch, k, idCol, textCol),
-        batchId, censusDir, numBuckets, keyCol = "g")(
-        _.groupBy(col("g")).agg(sum(col("n_docs")).as("n_docs")))
-    }
-
-  /** The committed bucketed census (union of bucket latests). */
-  def latestCensusBucketed(spark: SparkSession,
-                           censusDir: String): Option[DataFrame] =
-    BucketedState.latestState(spark, censusDir)
-
-  /** Start the stream. After each batch's fold commits, `onCensus` gets
-    * the updated census frame and the batch id — e.g. to score the next
-    * ingest batch ([[Dedup.dupSpanStatsIncremental]]) or republish a
-    * duplicated-gram (`n_docs >= 2`) filter set. `onCensus` must
-    * materialize the frame (write/collect) before returning: it reads
-    * the version the GC window deletes two batches later, so a deferred
-    * read can hit FileNotFoundException (the same contract as
-    * [[StreamingLineCensus.start]]). */
-  def start(docs: DataFrame, censusDir: String, checkpointDir: String,
-            onCensus: (DataFrame, Long) => Unit = (_, _) => (),
-            k: Int = 8, idCol: String = "doc_id", textCol: String = "text",
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, batchId, censusDir, k, idCol, textCol)
-        onCensus(latestCensus(batch.sparkSession, censusDir).get, batchId)
       }
       .start()
 }

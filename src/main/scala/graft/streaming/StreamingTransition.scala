@@ -13,16 +13,12 @@ import graft.operators.EventAnalytics
   * pairs, and the additive (from_type, to_type, n) transition census the
   * report reads — the family's durable form, slotting into the
   * [[VersionedState]] chain exactly as [[StreamingSessionize]] does for
-  * sessions and [[StreamingLineCensus]] for line counts.
+  * sessions and [[StreamingAdditiveCensus]] does for additive censuses.
   *
-  * Both chains are replay-idempotent independently: a replayed batch
-  * recomputes its version from each chain's predecessor STRICTLY below
-  * the batch id, so a crash between the census commit and the state
-  * commit re-runs the batch against the same predecessors and rewrites
-  * both versions identically — no double-count window exists. The census
-  * commits FIRST (delivery-before-state, [[StreamingSessionize]]'s
-  * ordering): a failure after the census but before the state replays
-  * into identical artifacts.
+  * Both chains ride [[VersionedState.advance]], the census nested inside
+  * the state's fold so it commits FIRST (delivery-before-state): a crash
+  * between the commits replays both against the same predecessors into
+  * identical versions — no double-count window exists.
   *
   * Micro-batches must be time-partitioned per user in (ts, tie) order —
   * the operator's raise_error enforces it row-lazily, including on an
@@ -48,28 +44,24 @@ object StreamingTransition {
                 tieCol: String = "event_id"): Unit =
     graft.CacheBarriers.withScope {
       val spark = batch.sparkSession
-      val svs = VersionedState.versions(spark, stateDir)
-      VersionedState.requireNoNewerThan(svs, stateDir, batchId)
-      val prev = svs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$stateDir/v$v"))
+      VersionedState.advance(spark, stateDir, batchId) { prev =>
         // tie/user types derived from THIS batch's schema — a hardcoded
         // default makes the first fold of a non-long tie (or user)
         // column an AnalysisException at the state union
-        .getOrElse(EventAnalytics.emptyTransitionState(spark, userCol,
-          batch.schema(tieCol).dataType, batch.schema(userCol).dataType))
-      val (delta, state) = EventAnalytics.transitionMatrixIncremental(
-        batch, prev, tsUs(batch), userCol, typeCol, tieCol)
-      val cvs = VersionedState.versions(spark, censusDir)
-      VersionedState.requireNoNewerThan(cvs, censusDir, batchId)
-      val census = cvs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$censusDir/v$v"))
-        .map(EventAnalytics.mergeTransitionCounts(_, delta))
-        .getOrElse(delta)
-      census.write.mode("overwrite").parquet(s"$censusDir/v$batchId")
-      VersionedState.gcBefore(spark, censusDir, batchId, cvs)
-      state.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-      VersionedState.gcBefore(spark, stateDir, batchId, svs)
+        val (delta, state) = EventAnalytics.transitionMatrixIncremental(
+          batch,
+          prev.getOrElse(EventAnalytics.emptyTransitionState(spark, userCol,
+            batch.schema(tieCol).dataType, batch.schema(userCol).dataType)),
+          tsUs(batch), userCol, typeCol, tieCol)
+        mergeCensus(spark, censusDir, batchId, delta)
+        state
+      }
     }
+
+  private def mergeCensus(spark: SparkSession, censusDir: String,
+                          batchId: Long, delta: DataFrame): Unit =
+    VersionedState.advance(spark, censusDir, batchId)(
+      _.map(EventAnalytics.mergeTransitionCounts(_, delta)).getOrElse(delta))
 
   // ── The 100 TB state shape ────────────────────────────────────────────
 
@@ -97,27 +89,13 @@ object StreamingTransition {
       val spark = batch.sparkSession
       BucketedState.ensureMeta(spark, stateDir, numBuckets)
       val events = graft.CacheBarriers.barrier(batch)
-      val touched = events
-        .select(BucketedState.bucketOf(col(userCol), numBuckets).as("b"))
-        .filter(col("b").isNotNull).distinct()
-        .collect().map(_.getLong(0)).sorted
-      val prev = touched.toSeq.flatMap { b =>
-        val d = s"$stateDir/b$b"
-        VersionedState.versions(spark, d).find(_ < batchId)
-          .map(v => spark.read.parquet(s"$d/v$v"))
-      }.reduceOption(_.unionByName(_))
+      val prev = BucketedState.touchedBefore(stateDir,
+          events.select(col(userCol)), numBuckets, batchId)
         .getOrElse(EventAnalytics.emptyTransitionState(spark, userCol,
           events.schema(tieCol).dataType, events.schema(userCol).dataType))
       val (delta, state) = EventAnalytics.transitionMatrixIncremental(
         events, prev, tsUs(events), userCol, typeCol, tieCol)
-      val cvs = VersionedState.versions(spark, censusDir)
-      VersionedState.requireNoNewerThan(cvs, censusDir, batchId)
-      val census = cvs.find(_ < batchId)
-        .map(v => spark.read.parquet(s"$censusDir/v$v"))
-        .map(EventAnalytics.mergeTransitionCounts(_, delta))
-        .getOrElse(delta)
-      census.write.mode("overwrite").parquet(s"$censusDir/v$batchId")
-      VersionedState.gcBefore(spark, censusDir, batchId, cvs)
+      mergeCensus(spark, censusDir, batchId, delta)
       BucketedState.mergeBatchWith(
         state.select(col(userCol), col("last_type"), col("last_ts"),
           col("last_tie")),

@@ -30,14 +30,11 @@ import graft.source.ChangeEvent
 object StreamingUpsert {
 
   /** Latest committed state strictly before `beforeBatch` (a replayed batch
-    * must merge against its predecessor, never its own partial output).
-    * "Committed" = carries the `_SUCCESS` job-commit marker — a version
-    * torn by a crash mid-write is invisible here, so recovery reads the
-    * intact predecessor (see [[VersionedState]]). */
+    * must merge against its predecessor, never its own partial output;
+    * see [[VersionedState]]). */
   def latestState(spark: SparkSession, stateDir: String,
                   beforeBatch: Long = Long.MaxValue): Option[DataFrame] =
-    VersionedState.versions(spark, stateDir).find(_ < beforeBatch)
-      .map(v => spark.read.parquet(s"$stateDir/v$v"))
+    VersionedState.tableBefore(spark, stateDir, beforeBatch)
 
   /** Seed the state with a direct-read backfill snapshot BEFORE the
     * stream starts (SURVEY §3.2: initial sync, then tail from the
@@ -49,21 +46,11 @@ object StreamingUpsert {
     Upsert.lastWriterWins(snapshot)
       .write.mode("overwrite").parquet(s"$stateDir/v-1")
 
-  /** Idempotent merge of one micro-batch into the versioned state. One
-    * directory listing serves the guard, the predecessor lookup, and the
-    * GC (on object stores the listings dominate small merges). */
-  def mergeBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val vs = VersionedState.versions(spark, stateDir)
-    VersionedState.requireNoNewerThan(vs, stateDir, batchId)
-    val prev = vs.find(_ < batchId)
-      .map(v => spark.read.parquet(s"$stateDir/v$v"))
-    val merged = Upsert.lastWriterWins(
-      prev.map(_.unionByName(batch)).getOrElse(batch))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    // GC: keep this version and its predecessor (crash-recovery window)
-    VersionedState.gcBefore(spark, stateDir, batchId, vs)
-  }
+  /** Idempotent merge of one micro-batch into the versioned state. */
+  def mergeBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit =
+    VersionedState.advance(batch.sparkSession, stateDir, batchId) { prev =>
+      Upsert.lastWriterWins(prev.map(_.unionByName(batch)).getOrElse(batch))
+    }
 
   /** Start the continuous pipeline: envelope stream → optional transform →
     * LWW-merged durable state, checkpointed for resume (T2/T3).

@@ -1,18 +1,41 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared mechanics for versioned parquet state directories
-  * (`<dir>/v<batchId>`), used by [[StreamingUpsert]] (one global chain)
-  * and [[BucketedState]] (one chain per bucket).
+/** The versioned-state protocol every durable streaming fold shares: a
+  * state directory holds one parquet version per micro-batch,
+  * `<dir>/v<batchId>`, and [[advance]] is the one way to commit the next.
   *
-  * Commit protocol: a version is COMMITTED iff Spark's `_SUCCESS`
-  * job-commit marker exists inside it. A crash mid-write leaves a
-  * directory without the marker (or with only `_temporary`), and every
-  * reader here ignores such directories — so `latest*` can never select
-  * a torn version over its intact predecessor. Writers get this for free
-  * (parquet job commit creates `_SUCCESS` last).
+  *  - COMMITTED: a version counts iff Spark's `_SUCCESS` job-commit marker
+  *    exists inside it. A crash mid-write leaves a directory without the
+  *    marker (or with only `_temporary`), which every reader here ignores,
+  *    so a torn version is never selected over its intact predecessor.
+  *  - PREDECESSOR: batch N folds into the latest committed version
+  *    STRICTLY below N ([[tableBefore]]). A replayed batch therefore
+  *    recomputes `vN` from `vN−1` instead of re-merging into its own
+  *    output, which makes non-idempotent folds (additive censuses)
+  *    replay-safe under at-least-once delivery.
+  *  - GUARD: committed versions NEWER than the batch mean the dir belongs
+  *    to a further-progressed checkpoint; merging would stay invisible to
+  *    readers until the batch ids caught up, so it fails loudly
+  *    ([[requireNoNewerThan]]). Seeing its own version is fine.
+  *  - GC: after the write, everything older than the predecessor is
+  *    deleted — this version plus its predecessor are the crash window.
+  *    A callback reading a committed version must materialize it before
+  *    returning: the GC deletes it two batches later.
+  *
+  * Two-chain folds (a state plus the census or report it feeds) nest one
+  * [[advance]] inside the other's fold: both guards run before any write,
+  * and the inner chain (the delivery) commits before the outer (the
+  * state), so a crash between the commits replays into identical
+  * versions. Side effects a fold ships (closed sessions, cut rows) run
+  * inside the fold, before the commit: a failed sink replays the batch
+  * rather than committing state for rows never delivered.
+  *
+  * [[BucketedState]] runs the same protocol per bucket; the multi-table
+  * curation stores use [[requireNoNewerThan]] / [[gcBefore]] directly
+  * and commit their dir-level marker with [[commitMarker]].
   */
 private[streaming] object VersionedState {
 
@@ -45,20 +68,29 @@ private[streaming] object VersionedState {
     }.sorted.reverse
   }
 
-  /** A fresh checkpoint must not merge into a LATER state dir: committed
-    * versions beyond the incoming batch id mean the state belongs to a
-    * different (further-progressed) checkpoint, and merging would be
-    * silently invisible to `latest*` until the batch ids catch up —
-    * resurrecting stale state with no error anywhere. (A replayed batch
-    * seeing its OWN version is fine: `<=`.) */
-  def requireNoNewerThan(spark: SparkSession, dir: String, batchId: Long): Unit =
-    requireNoNewerThan(versions(spark, dir), dir, batchId)
+  /** The latest committed version strictly below `maxExcl`
+    * (`Long.MaxValue`: the latest). */
+  def tableBefore(spark: SparkSession, dir: String,
+                  maxExcl: Long): Option[DataFrame] =
+    read(spark, dir, versions(spark, dir), maxExcl)
 
-  /** As above over a pre-listed version set — merge paths list the
-    * directory ONCE and thread the result through guard, predecessor
-    * lookup, and GC: on object stores the listings, not the merge work,
-    * dominate small batches (BucketedState multiplies them per touched
-    * bucket). */
+  private def read(spark: SparkSession, dir: String, vs: Seq[Long],
+                   maxExcl: Long): Option[DataFrame] =
+    vs.find(_ < maxExcl).map(v => spark.read.parquet(s"$dir/v$v"))
+
+  /** Commit `v<batchId>` = `next(predecessor)`. ONE listing serves the
+    * guard, the predecessor read and the GC: on object stores the
+    * listings, not the fold, dominate small batches. */
+  def advance(spark: SparkSession, dir: String, batchId: Long)
+             (next: Option[DataFrame] => DataFrame): Unit = {
+    val vs = versions(spark, dir)
+    requireNoNewerThan(vs, dir, batchId)
+    next(read(spark, dir, vs, batchId))
+      .write.mode("overwrite").parquet(s"$dir/v$batchId")
+    gcBefore(spark, dir, batchId, vs)
+  }
+
+  /** The stale-checkpoint guard over a listing taken this batch. */
   def requireNoNewerThan(vs: Seq[Long], dir: String, batchId: Long): Unit = {
     val newer = vs.filter(_ > batchId)
     require(newer.isEmpty,
@@ -67,14 +99,9 @@ private[streaming] object VersionedState {
         "checkpoint; use a fresh state dir or restore the matching checkpoint")
   }
 
-  /** GC: keep the newest version strictly below `batchId` (the
-    * crash-recovery predecessor) and delete everything older. */
-  def gcBefore(spark: SparkSession, dir: String, batchId: Long): Unit =
-    gcBefore(spark, dir, batchId, versions(spark, dir))
-
-  /** As above over a pre-listed version set (targets are strictly below
-    * `batchId`, so a listing taken before this batch's own write is
-    * exactly the GC candidate set). */
+  /** GC: keep the newest version strictly below `batchId` and delete
+    * everything older. Targets are strictly below `batchId`, so a listing
+    * taken before this batch's own write is exactly the candidate set. */
   def gcBefore(spark: SparkSession, dir: String, batchId: Long,
                vs: Seq[Long]): Unit = {
     val f = fs(spark, dir)

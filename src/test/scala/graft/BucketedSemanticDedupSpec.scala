@@ -100,6 +100,32 @@ class BucketedSemanticDedupSpec extends AnyFunSuite {
     assert(bucketsWithVersion(0L) == expected)
   }
 
+  test("a torn index append (data landed, manifest did not) heals on replay") {
+    import spark.implicits._
+    val stateDir = Files.createTempDirectory("graft-bsd-state4").toString
+    BucketedSemanticDedup.bootstrap(b1, stateDir,
+      centroidPred = col("vec_id") === 1L, minCos, NumBuckets)
+    // simulate mergeBatch crashing INSIDE appendToIndex: the decisions
+    // dir written, index DATA appended, `_ids` manifest NOT updated, and
+    // no labelmap version committed for the batch
+    val batch = batch2.toDF("vec_id", "embedding")
+    batch.write.mode("overwrite")
+      .parquet(s"$stateDir/decisions/b0") // placeholder attempt evidence
+    Similarity.ivfAssign(batch,
+        Similarity.readCentroids(spark, s"$stateDir/index"),
+        "vec_id", "embedding")
+      .write.mode("append").partitionBy("bucket")
+      .parquet(s"$stateDir/index")
+    // the checkpoint replays batch 0; without the manifest rebuild the
+    // anti-join would re-admit the landed rows as duplicates
+    BucketedSemanticDedup.mergeBatch(batch, 0L, stateDir, minCos, NumBuckets)
+    val ids = spark.read.parquet(s"$stateDir/index")
+      .select("vec_id").collect().map(_.getLong(0))
+    assert(ids.length == ids.distinct.length,
+      s"duplicate index rows after torn-append replay: ${ids.sorted.toSeq}")
+    assert(ids.toSet == Set(1L, 2L, 3L, 4L, 10L, 11L))
+  }
+
   test("a replayed micro-batch converges to the same state") {
     import spark.implicits._
     val stateDir = Files.createTempDirectory("graft-bsd-state3").toString

@@ -78,21 +78,22 @@ class QuantilesSpec extends AnyFunSuite {
 
     val s1 = MemoryStream[(Long, String, Long)]
     s1.addData(b1)
-    graft.streaming.StreamingQuantiles.start(
-      s1.toDF().toDF("doc_id", "source", "score"), histDir, ckpt,
-      scoreCol = col("score"), binWidth = 1).awaitTermination()
+    def start(src: MemoryStream[(Long, String, Long)]) =
+      graft.streaming.StreamingAdditiveCensus.start(
+        src.toDF().toDF("doc_id", "source", "score"), histDir, ckpt,
+        censusOf = Quantiles.scoreHistogram(_, col("score"), 1),
+        keyCols = Seq("source", "bin"))
+    start(s1).awaitTermination()
     // "crash": same checkpoint, b1 not replayed
     val s2 = MemoryStream[(Long, String, Long)]
     s2.addData(b1)
     s2.addData(b2)
-    graft.streaming.StreamingQuantiles.start(
-      s2.toDF().toDF("doc_id", "source", "score"), histDir, ckpt,
-      scoreCol = col("score"), binWidth = 1).awaitTermination()
+    start(s2).awaitTermination()
 
     def rset(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(_.toSeq).toSet
-    val streamed = graft.streaming.StreamingQuantiles
-      .latestHistogram(spark, histDir).getOrElse(fail("no histogram"))
+    val streamed = graft.streaming.StreamingAdditiveCensus
+      .latest(spark, histDir).getOrElse(fail("no histogram"))
     assert(rset(streamed) ==
       rset(Quantiles.scoreHistogram(docs, col("score"), 1)))
     // thresholds derived from the artifact == full-corpus thresholds

@@ -135,4 +135,22 @@ class StreamingAdditiveCensusSpec extends AnyFunSuite {
       keyedSet(Features.bm25TopKFromCensus(census(docRows), probes, k = 3),
         Seq("query_id")))
   }
+
+  test("a census whose columns are all keys is refused by name") {
+    val keyOnly = docs(docRows).select("source", "doc_id")
+    val keys = Seq("source", "doc_id")
+    def refused(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("no count column") &&
+        e.getMessage.contains("source, doc_id"), e.getMessage)
+    }
+    refused(StreamingAdditiveCensus.merge(keyOnly, keyOnly, keys))
+    val censusDir = tmp("keyonly-state")
+    refused(StreamingAdditiveCensus.mergeBatch(keyOnly, 0L, censusDir, keys))
+    refused(StreamingAdditiveCensus.mergeBatchBucketed(keyOnly, 0L,
+      tmp("keyonly-bkt"), numBuckets = 4, bucketKey = "doc_id",
+      keyCols = keys))
+    // refused before anything committed
+    assert(StreamingAdditiveCensus.latest(spark, censusDir).isEmpty)
+  }
 }

@@ -6,10 +6,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.Similarity
-import graft.streaming.StreamingCentroidSums
+import graft.streaming.StreamingAdditiveCensus
 
-/** [[StreamingCentroidSums]] — the additive centroid artifact maintained
-  * continuously. Streamed folds (with a checkpoint-resume boundary) must
+/** The additive centroid artifact ([[Similarity.labelCentroidSums]] on
+  * `(label, pos)`) maintained continuously through
+  * [[StreamingAdditiveCensus]]. Streamed folds (with a checkpoint-resume boundary) must
   * equal the full-corpus sums exactly, and scoring a batch against the
   * rolled-forward artifact must equal the full-corpus scoring. */
 class StreamingCentroidSumsSpec extends AnyFunSuite {
@@ -25,6 +26,14 @@ class StreamingCentroidSumsSpec extends AnyFunSuite {
     rows.toDF("vec_id", "label", "embedding")
   }
 
+  private val keys = Seq("label", "pos")
+
+  private def startSums(src: MemoryStream[(Long, Long, Array[Double])],
+                        sumsDir: String, ckpt: String) =
+    StreamingAdditiveCensus.start(
+      src.toDF().toDF("vec_id", "label", "embedding"), sumsDir, ckpt,
+      censusOf = Similarity.labelCentroidSums(_), keyCols = keys)
+
   test("streamed folds across a checkpoint resume equal full-corpus sums") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -33,26 +42,24 @@ class StreamingCentroidSumsSpec extends AnyFunSuite {
 
     val s1 = MemoryStream[(Long, Long, Array[Double])]
     s1.addData(b1)
-    StreamingCentroidSums.start(s1.toDF().toDF("vec_id", "label", "embedding"),
-      sumsDir, ckpt).awaitTermination()
+    startSums(s1, sumsDir, ckpt).awaitTermination()
 
     // "crash": new query, same checkpoint — b1 is not replayed
     val s2 = MemoryStream[(Long, Long, Array[Double])]
     s2.addData(b1)
     s2.addData(b2)
     s2.addData(b3)
-    StreamingCentroidSums.start(s2.toDF().toDF("vec_id", "label", "embedding"),
-      sumsDir, ckpt).awaitTermination()
+    startSums(s2, sumsDir, ckpt).awaitTermination()
 
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(_.toSeq).toSet
-    val streamed = StreamingCentroidSums.latestSums(spark, sumsDir)
+    val streamed = StreamingAdditiveCensus.latest(spark, sumsDir)
       .getOrElse(fail("no committed sums"))
     val full = Similarity.labelCentroidSums(df(b1 ++ b2 ++ b3))
     assert(rows(streamed) == rows(full) && rows(full).nonEmpty)
 
     // scoring the last batch against the artifact == full-corpus scoring
-    val incr = StreamingCentroidSums.latestSums(spark, sumsDir).get
+    val incr = StreamingAdditiveCensus.latest(spark, sumsDir).get
     val got = Similarity.scoreAgainstCentroidSums(df(b3), incr, minCos = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getBoolean(3)))
     val want = Similarity.labelCentroidOutliers(df(b1 ++ b2 ++ b3),
@@ -64,12 +71,15 @@ class StreamingCentroidSumsSpec extends AnyFunSuite {
 
   test("a replayed batch recomputes its version, never double-merges") {
     val sumsDir = Files.createTempDirectory("graft-scs-state2").toString
-    StreamingCentroidSums.mergeBatch(df(b1), 0L, sumsDir)
-    StreamingCentroidSums.mergeBatch(df(b2), 1L, sumsDir)
-    def rows() = StreamingCentroidSums.latestSums(spark, sumsDir).get
+    def fold(rows: Seq[(Long, Long, Array[Double])], batchId: Long): Unit =
+      StreamingAdditiveCensus.mergeBatch(Similarity.labelCentroidSums(df(rows)),
+        batchId, sumsDir, keys)
+    fold(b1, 0L)
+    fold(b2, 1L)
+    def rows() = StreamingAdditiveCensus.latest(spark, sumsDir).get
       .collect().map(_.toSeq).toSet
     val before = rows()
-    StreamingCentroidSums.mergeBatch(df(b2), 1L, sumsDir) // replay
+    fold(b2, 1L) // replay
     assert(rows() == before)
   }
 }

@@ -1,13 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.Features
-import graft.streaming.StreamingDfCensus
+import graft.streaming.StreamingAdditiveCensus
 
-/** The streaming document-frequency-census twin: per-micro-batch folds
-  * into the versioned chain equal the one-shot census (doc count
+/** The document-frequency census ([[Features.dfCensusWithCount]] on
+  * `wh`) through the generic [[StreamingAdditiveCensus]] fold:
+  * per-micro-batch folds into the versioned chain equal the one-shot
+  * census (doc count
   * included, via the NULL-key sentinel), the checkpoint + versioned
   * state survive kill + resume without double-counting, the bucketed
   * form rewrites only touched buckets, and a streamed census drives
@@ -28,6 +32,12 @@ class StreamingDfCensusSpec extends AnyFunSuite {
     df.as[(String, Long)].collect()
       .map { case (wh, df_) => Option(wh) -> df_ }.toSet
 
+  private def startDf(src: MemoryStream[(Long, String)], censusDir: String,
+                      ckpt: String, trigger: Trigger = Trigger.AvailableNow()) =
+    StreamingAdditiveCensus.start(src.toDF().toDF("doc_id", "text"),
+      censusDir, ckpt, censusOf = Features.dfCensusWithCount(_),
+      keyCols = Seq("wh"), trigger = trigger)
+
   private def oneShot =
     Features.dfCensusWithCount(docRows.toDF("doc_id", "text"))
 
@@ -38,8 +48,7 @@ class StreamingDfCensusSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-dfcensus-ckpt").toString
     val src = MemoryStream[(Long, String)]
-    val q = StreamingDfCensus.start(
-      src.toDF().toDF("doc_id", "text"), censusDir, ckpt,
+    val q = startDf(src, censusDir, ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     src.addData(docRows.take(2))
     q.processAllAvailable()
@@ -47,7 +56,7 @@ class StreamingDfCensusSpec extends AnyFunSuite {
     q.processAllAvailable()
     q.stop()
 
-    val streamed = StreamingDfCensus.latestCensus(spark, censusDir).get
+    val streamed = StreamingAdditiveCensus.latest(spark, censusDir).get
     assert(censusSet(streamed) == censusSet(oneShot))
     val (census, n) = Features.censusParts(streamed)
     assert(n === 4L)
@@ -64,8 +73,7 @@ class StreamingDfCensusSpec extends AnyFunSuite {
 
     val src1 = MemoryStream[(Long, String)]
     src1.addData(docRows.take(2))
-    val q1 = StreamingDfCensus.start(
-      src1.toDF().toDF("doc_id", "text"), censusDir, ckpt)
+    val q1 = startDf(src1, censusDir, ckpt)
     q1.processAllAvailable()
     q1.stop()
 
@@ -74,12 +82,11 @@ class StreamingDfCensusSpec extends AnyFunSuite {
     val src2 = MemoryStream[(Long, String)]
     src2.addData(docRows.take(2))
     src2.addData(docRows.drop(2))
-    val q2 = StreamingDfCensus.start(
-      src2.toDF().toDF("doc_id", "text"), censusDir, ckpt)
+    val q2 = startDf(src2, censusDir, ckpt)
     q2.processAllAvailable()
     q2.stop()
 
-    assert(censusSet(StreamingDfCensus.latestCensus(spark, censusDir).get)
+    assert(censusSet(StreamingAdditiveCensus.latest(spark, censusDir).get)
       == censusSet(oneShot))
   }
 
@@ -87,17 +94,18 @@ class StreamingDfCensusSpec extends AnyFunSuite {
     val censusDir = java.nio.file.Files
       .createTempDirectory("graft-dfcensus-bkt").toString
     def fold(rows: Seq[(Long, String)], batchId: Long): Unit =
-      StreamingDfCensus.mergeBatchBucketed(
-        rows.toDF("doc_id", "text"), batchId, censusDir, numBuckets = 8)
+      StreamingAdditiveCensus.mergeBatchBucketed(
+        Features.dfCensusWithCount(rows.toDF("doc_id", "text")), batchId,
+        censusDir, numBuckets = 8, bucketKey = "wh", keyCols = Seq("wh"))
     fold(docRows.take(2), 0L)
     fold(docRows.drop(2), 1L)
     val bucketed = censusSet(
-      StreamingDfCensus.latestCensusBucketed(spark, censusDir).get)
+      StreamingAdditiveCensus.latestBucketed(spark, censusDir).get)
     assert(bucketed == censusSet(oneShot))
     // replay idempotence per bucket
     fold(docRows.drop(2), 1L)
     assert(censusSet(
-      StreamingDfCensus.latestCensusBucketed(spark, censusDir).get)
+      StreamingAdditiveCensus.latestBucketed(spark, censusDir).get)
       == bucketed)
     // only-touched-buckets: a one-word batch touches at most two buckets
     // (its word's and the sentinel's) — not all eight
@@ -118,14 +126,13 @@ class StreamingDfCensusSpec extends AnyFunSuite {
     val src = MemoryStream[(Long, String)]
     src.addData(docRows.take(2))
     src.addData(docRows.drop(2))
-    val q = StreamingDfCensus.start(
-      src.toDF().toDF("doc_id", "text"), censusDir, ckpt)
+    val q = startDf(src, censusDir, ckpt)
     q.processAllAvailable()
     q.stop()
 
     val b2 = Seq(11L -> "a b zz", 12L -> "f").toDF("doc_id", "text")
     val (artifact, nOld) = Features.censusParts(
-      StreamingDfCensus.latestCensus(spark, censusDir).get)
+      StreamingAdditiveCensus.latest(spark, censusDir).get)
     val merged = Features.mergeDfCensus(artifact, Features.dfCensus(b2))
     val inc = Features.hashedTfIdfVectors(b2, merged, nDocs = nOld + 2L,
         dim = 16)

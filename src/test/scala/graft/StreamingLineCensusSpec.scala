@@ -1,12 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.Dedup
-import graft.streaming.StreamingLineCensus
+import graft.streaming.StreamingAdditiveCensus
 
-/** The streaming line-census twin: per-micro-batch folds into the
+/** The line census ([[Dedup.lineCensus]] on `lh`) through the generic
+  * [[StreamingAdditiveCensus]] fold: per-micro-batch folds into the
   * versioned census chain equal the one-shot batch census, and the
   * checkpoint + versioned state survive kill + resume without
   * double-counting. */
@@ -24,6 +27,14 @@ class StreamingLineCensusSpec extends AnyFunSuite {
   private def censusSet(df: org.apache.spark.sql.DataFrame) =
     df.as[(String, Long)].collect().toSet
 
+  private def startLine(src: MemoryStream[(Long, String)], censusDir: String,
+                        ckpt: String,
+                        onCensus: (DataFrame, Long) => Unit = (_, _) => (),
+                        trigger: Trigger = Trigger.AvailableNow()) =
+    StreamingAdditiveCensus.start(src.toDF().toDF("doc_id", "text"),
+      censusDir, ckpt, censusOf = Dedup.lineCensus(_), keyCols = Seq("lh"),
+      onCensus = onCensus, trigger = trigger)
+
   test("streamed census folds equal the one-shot batch census") {
     implicit val sqlCtx = spark.sqlContext
     val censusDir = java.nio.file.Files
@@ -32,8 +43,7 @@ class StreamingLineCensusSpec extends AnyFunSuite {
       .createTempDirectory("graft-linecensus-ckpt").toString
     var lastBatch = -1L
     val src = MemoryStream[(Long, String)]
-    val q = StreamingLineCensus.start(
-      src.toDF().toDF("doc_id", "text"), censusDir, ckpt,
+    val q = startLine(src, censusDir, ckpt,
       onCensus = (_, b) => lastBatch = b,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     src.addData(docRows.take(2))
@@ -43,7 +53,7 @@ class StreamingLineCensusSpec extends AnyFunSuite {
     q.stop()
 
     val streamed = censusSet(
-      StreamingLineCensus.latestCensus(spark, censusDir).get)
+      StreamingAdditiveCensus.latest(spark, censusDir).get)
     val oneShot = censusSet(Dedup.lineCensus(docRows.toDF("doc_id", "text")))
     assert(streamed == oneShot)
     assert(lastBatch >= 1L)
@@ -60,8 +70,7 @@ class StreamingLineCensusSpec extends AnyFunSuite {
 
     val src1 = MemoryStream[(Long, String)]
     src1.addData(docRows.take(2))
-    val q1 = StreamingLineCensus.start(
-      src1.toDF().toDF("doc_id", "text"), censusDir, ckpt)
+    val q1 = startLine(src1, censusDir, ckpt)
     q1.processAllAvailable()
     q1.stop()
 
@@ -70,13 +79,12 @@ class StreamingLineCensusSpec extends AnyFunSuite {
     val src2 = MemoryStream[(Long, String)]
     src2.addData(docRows.take(2))
     src2.addData(docRows.drop(2))
-    val q2 = StreamingLineCensus.start(
-      src2.toDF().toDF("doc_id", "text"), censusDir, ckpt)
+    val q2 = startLine(src2, censusDir, ckpt)
     q2.processAllAvailable()
     q2.stop()
 
     val streamed = censusSet(
-      StreamingLineCensus.latestCensus(spark, censusDir).get)
+      StreamingAdditiveCensus.latest(spark, censusDir).get)
     assert(streamed ==
       censusSet(Dedup.lineCensus(docRows.toDF("doc_id", "text"))))
   }
@@ -85,18 +93,19 @@ class StreamingLineCensusSpec extends AnyFunSuite {
     val censusDir = java.nio.file.Files
       .createTempDirectory("graft-linecensus-bkt").toString
     def fold(rows: Seq[(Long, String)], batchId: Long): Unit =
-      StreamingLineCensus.mergeBatchBucketed(
-        rows.toDF("doc_id", "text"), batchId, censusDir, numBuckets = 8)
+      StreamingAdditiveCensus.mergeBatchBucketed(
+        Dedup.lineCensus(rows.toDF("doc_id", "text")), batchId, censusDir,
+        numBuckets = 8, bucketKey = "lh", keyCols = Seq("lh"))
     fold(docRows.take(2), 0L)
     fold(docRows.drop(2), 1L)
     val bucketed = censusSet(
-      StreamingLineCensus.latestCensusBucketed(spark, censusDir).get)
+      StreamingAdditiveCensus.latestBucketed(spark, censusDir).get)
     assert(bucketed ==
       censusSet(Dedup.lineCensus(docRows.toDF("doc_id", "text"))))
     // replay idempotence per bucket
     fold(docRows.drop(2), 1L)
     assert(censusSet(
-      StreamingLineCensus.latestCensusBucketed(spark, censusDir).get)
+      StreamingAdditiveCensus.latestBucketed(spark, censusDir).get)
       == bucketed)
     // only-touched-buckets: a single-line batch hashes into exactly one
     // bucket — no other bucket directory gains a v2 version
@@ -107,7 +116,7 @@ class StreamingLineCensusSpec extends AnyFunSuite {
     assert(withV2.length == 1,
       s"expected exactly one bucket to rewrite, got ${withV2.length}")
     assert(censusSet(
-      StreamingLineCensus.latestCensusBucketed(spark, censusDir).get)
+      StreamingAdditiveCensus.latestBucketed(spark, censusDir).get)
       .exists(_._1.nonEmpty))
   }
 }

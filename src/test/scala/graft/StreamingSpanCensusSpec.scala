@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.Dedup
-import graft.streaming.StreamingSpanCensus
+import graft.streaming.{StreamingAdditiveCensus, StreamingSpanCensus}
 
-/** The streaming span-census twin: per-micro-batch folds into the
+/** The span census ([[Dedup.spanCensus]] on `g`) through the generic
+  * [[StreamingAdditiveCensus]] fold, and the [[StreamingSpanCensus]]
+  * cut stream: per-micro-batch folds into the
   * versioned census chain equal the one-shot batch census, the
   * checkpoint + versioned state survive kill + resume without
   * double-counting, the bucketed form rewrites only touched buckets,
@@ -27,6 +31,14 @@ class StreamingSpanCensusSpec extends AnyFunSuite {
   private def censusSet(df: org.apache.spark.sql.DataFrame) =
     df.as[(String, Long)].collect().toSet
 
+  private def startSpan(src: MemoryStream[(Long, String)], censusDir: String,
+                        ckpt: String,
+                        onCensus: (DataFrame, Long) => Unit = (_, _) => (),
+                        trigger: Trigger = Trigger.AvailableNow()) =
+    StreamingAdditiveCensus.start(src.toDF().toDF("doc_id", "text"),
+      censusDir, ckpt, censusOf = Dedup.spanCensus(_, k = 4),
+      keyCols = Seq("g"), onCensus = onCensus, trigger = trigger)
+
   private def oneShot = Dedup.spanCensus(docRows.toDF("doc_id", "text"), k = 4)
 
   test("streamed census folds equal the one-shot batch census") {
@@ -37,9 +49,8 @@ class StreamingSpanCensusSpec extends AnyFunSuite {
       .createTempDirectory("graft-spancensus-ckpt").toString
     var lastBatch = -1L
     val src = MemoryStream[(Long, String)]
-    val q = StreamingSpanCensus.start(
-      src.toDF().toDF("doc_id", "text"), censusDir, ckpt,
-      onCensus = (_, b) => lastBatch = b, k = 4,
+    val q = startSpan(src, censusDir, ckpt,
+      onCensus = (_, b) => lastBatch = b,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     src.addData(docRows.take(2))
     q.processAllAvailable()
@@ -48,7 +59,7 @@ class StreamingSpanCensusSpec extends AnyFunSuite {
     q.stop()
 
     val streamed = censusSet(
-      StreamingSpanCensus.latestCensus(spark, censusDir).get)
+      StreamingAdditiveCensus.latest(spark, censusDir).get)
     assert(streamed == censusSet(oneShot))
     assert(lastBatch >= 1L)
     // the shared w1..w4 gram counts its three distinct carrier docs
@@ -64,8 +75,7 @@ class StreamingSpanCensusSpec extends AnyFunSuite {
 
     val src1 = MemoryStream[(Long, String)]
     src1.addData(docRows.take(2))
-    val q1 = StreamingSpanCensus.start(
-      src1.toDF().toDF("doc_id", "text"), censusDir, ckpt, k = 4)
+    val q1 = startSpan(src1, censusDir, ckpt)
     q1.processAllAvailable()
     q1.stop()
 
@@ -74,13 +84,12 @@ class StreamingSpanCensusSpec extends AnyFunSuite {
     val src2 = MemoryStream[(Long, String)]
     src2.addData(docRows.take(2))
     src2.addData(docRows.drop(2))
-    val q2 = StreamingSpanCensus.start(
-      src2.toDF().toDF("doc_id", "text"), censusDir, ckpt, k = 4)
+    val q2 = startSpan(src2, censusDir, ckpt)
     q2.processAllAvailable()
     q2.stop()
 
     assert(censusSet(
-      StreamingSpanCensus.latestCensus(spark, censusDir).get)
+      StreamingAdditiveCensus.latest(spark, censusDir).get)
       == censusSet(oneShot))
   }
 
@@ -88,18 +97,20 @@ class StreamingSpanCensusSpec extends AnyFunSuite {
     val censusDir = java.nio.file.Files
       .createTempDirectory("graft-spancensus-bkt").toString
     def fold(rows: Seq[(Long, String)], batchId: Long): Unit =
-      StreamingSpanCensus.mergeBatchBucketed(
-        rows.toDF("doc_id", "text"), batchId, censusDir,
-        numBuckets = 8, k = 4)
+      CacheBarriers.withScope {
+        StreamingAdditiveCensus.mergeBatchBucketed(
+          Dedup.spanCensus(rows.toDF("doc_id", "text"), k = 4), batchId,
+          censusDir, numBuckets = 8, bucketKey = "g", keyCols = Seq("g"))
+      }
     fold(docRows.take(2), 0L)
     fold(docRows.drop(2), 1L)
     val bucketed = censusSet(
-      StreamingSpanCensus.latestCensusBucketed(spark, censusDir).get)
+      StreamingAdditiveCensus.latestBucketed(spark, censusDir).get)
     assert(bucketed == censusSet(oneShot))
     // replay idempotence per bucket
     fold(docRows.drop(2), 1L)
     assert(censusSet(
-      StreamingSpanCensus.latestCensusBucketed(spark, censusDir).get)
+      StreamingAdditiveCensus.latestBucketed(spark, censusDir).get)
       == bucketed)
     // only-touched-buckets: a one-window batch hashes into exactly one
     // bucket — no other bucket directory gains a v2 version
@@ -120,8 +131,7 @@ class StreamingSpanCensusSpec extends AnyFunSuite {
     val src = MemoryStream[(Long, String)]
     src.addData(docRows.take(2))
     src.addData(docRows.drop(2))
-    val q = StreamingSpanCensus.start(
-      src.toDF().toDF("doc_id", "text"), censusDir, ckpt, k = 4)
+    val q = startSpan(src, censusDir, ckpt)
     q.processAllAvailable()
     q.stop()
 
@@ -129,7 +139,7 @@ class StreamingSpanCensusSpec extends AnyFunSuite {
     val b2 = Seq(11L -> "w1 w2 w3 w4 w5 w6", 12L -> "g1 g2 g3 g4 g5")
       .toDF("doc_id", "text")
     val (inc, _) = Dedup.dupSpanStatsIncremental(b2,
-      StreamingSpanCensus.latestCensus(spark, censusDir).get, k = 4)
+      StreamingAdditiveCensus.latest(spark, censusDir).get, k = 4)
     val incM = inc.collect().map(r => r.getLong(0) -> ((r.getLong(1),
       r.getLong(2), r.getLong(3), r.getBoolean(4)))).toMap
     val full = Dedup.dupSpanStats(
@@ -171,7 +181,7 @@ class StreamingSpanCensusSpec extends AnyFunSuite {
     assert(cuts(3L) === (("f1 f2 f3 f4 f5", 0L)))
     // and the census chain kept folding: it now equals the one-shot
     assert(censusSet(
-      StreamingSpanCensus.latestCensus(spark, censusDir).get)
+      StreamingAdditiveCensus.latest(spark, censusDir).get)
       == censusSet(oneShot))
   }
 
@@ -202,7 +212,30 @@ class StreamingSpanCensusSpec extends AnyFunSuite {
     assert(cuts === Map(1L -> "w5 w6", 2L -> "x5 x6",
       3L -> "f1 f2 f3 f4 f5", 4L -> ""))
     assert(censusSet(
-      StreamingSpanCensus.latestCensus(spark, censusDir).get)
+      StreamingAdditiveCensus.latest(spark, censusDir).get)
       == censusSet(oneShot))
+  }
+
+  test("a multi-batch span-census stream leaves no cached blocks behind") {
+    implicit val sqlCtx = spark.sqlContext
+    val censusDir = java.nio.file.Files
+      .createTempDirectory("graft-spancensus-scope").toString
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-spancensus-scope-ckpt").toString
+    CacheBarriers.releaseAll()
+    val sc = spark.sparkContext
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    val src = MemoryStream[(Long, String)]
+    val q = startSpan(src, censusDir, ckpt,
+      onCensus = (df, _) => { df.collect(); () },
+      trigger = Trigger.ProcessingTime(0L))
+    try docRows.grouped(1).take(3).foreach { chunk => // three batches
+      src.addData(chunk)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+    val left = sc.getRDDStorageInfo.filterNot(r => before(r.id))
+    assert(left.isEmpty, s"blocks left: ${left.mkString(", ")}")
+    assert(CacheBarriers.releaseAll() == 0)
   }
 }
