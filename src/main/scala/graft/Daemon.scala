@@ -64,7 +64,12 @@ object Daemon {
                         transport: Option[String] = None,
                         maxDocs: Int = 10000,
                         sink: Option[String] = None,
-                        pipeline: Option[String] = None)
+                        pipeline: Option[String] = None) {
+    // a zero cadence would run tailing micro-batches back to back and
+    // switch off the /healthz staleness check (the statsTrigger rule)
+    require(intervalSec > 0,
+      s"--interval must be a positive number of seconds, got $intervalSec")
+  }
 
   private[graft] def parseArgs(argv: Array[String]): Args = {
     val (flags, pos) = {
@@ -87,12 +92,16 @@ object Daemon {
       "usage: graft.Daemon <config.toml> <eventsDir> <workDir> " +
         "[--port N] [--interval SECONDS] [--once] " +
         "[--transport KEY] [--maxDocs N] [--sink KEY] [--pipeline KEY]")
+    def num[A](k: String, parse: String => Option[A], default: A): A =
+      flags.get(k).fold(default)(v => parse(v).getOrElse(
+        throw new IllegalArgumentException(
+          s"--$k expects an integer, got '$v'")))
     Args(pos(0), pos(1), pos(2),
-      port = flags.get("port").map(_.toInt).getOrElse(8080),
-      intervalSec = flags.get("interval").map(_.toLong).getOrElse(10L),
+      port = num("port", _.toIntOption, 8080),
+      intervalSec = num("interval", _.toLongOption, 10L),
       once = flags.contains("once"),
       transport = flags.get("transport"),
-      maxDocs = flags.get("maxDocs").map(_.toInt).getOrElse(10000),
+      maxDocs = num("maxDocs", _.toIntOption, 10000),
       sink = flags.get("sink"),
       pipeline = flags.get("pipeline"))
   }

@@ -400,10 +400,8 @@ object Curation {
 
   /** Persist a full artifact set under `dir` (one parquet table per
     * artifact) — the between-runs form [[curateIncremental]] resumes
-    * from, and the per-version payload of
-    * [[graft.streaming.StreamingCuration]]'s state chain. Each write is
-    * a natural lineage cut: the next increment reads these files, so
-    * plans never compound across batches. */
+    * from. Each write is a natural lineage cut: the next increment reads
+    * these files, so plans never compound across batches. */
   def writeArtifacts(art: CurationArtifacts, dir: String): Unit = {
     art.hashReps.write.mode("overwrite").parquet(s"$dir/hashreps")
     art.signed.write.mode("overwrite").parquet(s"$dir/signed")
@@ -413,7 +411,7 @@ object Curation {
   }
 
   /** The census-sized half of [[writeArtifacts]] (counts/model/quality
-    * census) — the ONE layout definition both the whole-table store and
+    * census) — the ONE layout definition both [[writeArtifacts]] and
     * [[graft.streaming.BucketedCuration]]'s `small/` versions write, so
     * the two cannot silently diverge. */
   def writeSmallArtifacts(art: CurationArtifacts, dir: String): Unit = {

@@ -623,7 +623,7 @@ object Similarity {
                             minCos: Double, idCol: String = "vec_id",
                             vecCol: String = "embedding"): DataFrame = {
     // registered barrier (not a bare persist): long-lived sessions —
-    // the streaming twin's bootstrap in particular — release operator
+    // BucketedSemanticDedup's bootstrap in particular — release operator
     // caches through CacheBarriers scopes, and a direct persist here
     // would outlive them all, pinning the corpus-sized assignment
     val assigned = graft.CacheBarriers.barrier(
@@ -1549,7 +1549,7 @@ object Similarity {
     // would fabricate a singleton self-row in the artifact (batch-mate
     // pairs seen through the index merely duplicate the in-batch edge
     // and are harmless — a replayed batch must converge to the same
-    // state, pinned by StreamingSemanticDedupSpec)
+    // state, pinned by BucketedSemanticDedupSpec)
     val no = newAssigned.alias("a").join(old.alias("b"),
         col("a.bucket") === col("b.bucket") &&
           col(s"a.$idCol") =!= col(s"b.$idCol"))

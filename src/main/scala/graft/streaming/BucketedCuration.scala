@@ -9,12 +9,14 @@ import graft.llm.{Curation, QualityModel}
 import graft.llm.Curation.CurationArtifacts
 import graft.llm.Dedup
 
-/** The 100 TB form of [[StreamingCuration]]: the corpus-sized curation
-  * artifacts live in [[BucketedState]]'s hash-bucketed layout, so a
-  * micro-batch rewrites ONLY the buckets its deltas touch instead of the
-  * whole artifact tables. [[StreamingCuration]] rewrites `signed` (one
-  * row per kept doc — corpus-sized) per version; here that rewrite is
-  * the one super-linear per-batch cost that disappears.
+/** Streaming incremental curation ([[Curation.curateIncremental]] run
+  * batch by batch against DURABLE artifacts, with checkpoint/resume) in
+  * the 100 TB layout: the corpus-sized artifacts live in
+  * [[BucketedState]]'s hash-bucketed layout, so a micro-batch rewrites
+  * ONLY the buckets its deltas touch. A whole-table chain would rewrite
+  * `signed` (one row per kept doc — corpus-sized) every batch; here that
+  * super-linear per-batch cost disappears, and the old corpus is never
+  * re-read.
   *
   * Stores under `stateDir` (each a [[BucketedState.mergeBatchWith]]
   * chain with its own per-bucket versions, replay guard, and GC):
@@ -32,24 +34,27 @@ import graft.llm.Dedup
   *  - `census/` keyed `lh` — rows (lh, n_docs); combine = per-line sum
   *    (the additive line census).
   *  - `labelmap/v<id>/` — ONE whole-table chain (from_lbl, to_lbl): the
-  *    forwarding of old cluster labels merged into bigger components.
-  *    Composed per batch so every entry maps straight to its TERMINAL
-  *    label (one hop); pair-graph-sized, so its per-version rewrite is
-  *    control-plane cost. Reading cluster state = bucket rows left-join
-  *    the (broadcast) map, coalescing to the terminal label — exactly
-  *    the relabeled table [[StreamingCuration]] materializes per batch.
+  *    forwarding of old cluster labels merged into bigger components
+  *    ([[BucketedState.forwardLabels]] / [[BucketedState.composeLabels]]).
+  *    Pair-graph-sized, so its per-version rewrite is control-plane cost.
   *  - `small/v<id>/` — the census-sized artifacts (sourceCounts, LM
-  *    model, qualityCounts) as whole-table versions with a `_SUCCESS`
-  *    marker written LAST; its committed versions double as the "batch
-  *    fully merged" signal ([[latestArtifacts]] keys off it).
-  *  - `kept/b<id>/` — output slices, exactly like [[StreamingCuration]].
+  *    model, qualityCounts) as multi-table versions committed by
+  *    [[VersionedState.advanceDir]] (`_SUCCESS` marker LAST); its
+  *    committed versions double as the "batch fully merged" signal
+  *    ([[latestArtifacts]] keys off it).
+  *  - `kept/b<id>/` — each batch's kept slice, overwrite-mode so a replay
+  *    rewrites it deterministically. Output, not state: GC never touches
+  *    it, and with batch-monotone ids the union over slices equals a full
+  *    `curate` over everything ingested (representatives are min-id).
   *
-  * Replay safety: every input to a batch's delta computation is read
-  * per-store at the latest version STRICTLY BELOW the batch id, so a
-  * replayed batch (some buckets already committed at its id by a
-  * crashed attempt) recomputes the SAME deltas from the predecessor
-  * state and rewrites its version dirs byte-identically — the
-  * [[BucketedState]] contract, store by store. Deletion contract: a
+  * Commit order per batch: the `small/` and `labelmap/` guards both run
+  * before any write, then buckets → labelmap → kept slice → small tables
+  * → small marker. Replay safety: every input to a batch's delta
+  * computation is read per-store at the latest version STRICTLY BELOW
+  * the batch id, so a replayed batch (some buckets already committed at
+  * its id by a crashed attempt) recomputes the SAME deltas from the
+  * predecessor state and rewrites its version dirs byte-identically —
+  * the [[BucketedState]] contract, store by store. Deletion contract: a
   * tombstoned id never re-enters (batch ids are previously unseen,
   * [[Curation.curateIncremental]]'s append-only contract), so combines
   * may consume tombstones instead of persisting them.
@@ -82,58 +87,32 @@ object BucketedCuration {
 
   // ── state assembly ────────────────────────────────────────────────────
 
-  // replay-safe reads + schema templates live on [[BucketedState]] — one
-  // definition shared with every bucketed artifact store
-  private def bucketStateBefore(spark: SparkSession, dir: String,
-                                maxExcl: Long): Option[DataFrame] =
-    BucketedState.stateBefore(spark, dir, maxExcl)
-
-  private def ensureTemplate(slice: DataFrame, dir: String): Unit =
-    BucketedState.ensureTemplate(slice, dir)
-
-  private def tableBefore(spark: SparkSession, dir: String,
-                          maxExcl: Long): Option[DataFrame] =
-    VersionedState.tableBefore(spark, dir, maxExcl)
-
   /** Assemble the [[CurationArtifacts]] view of all stores as of the
-    * latest committed state strictly below `maxExcl`. */
+    * latest committed state strictly below `maxExcl`: `smallV` is the
+    * `small/` version and `labelmap` the forwarding map at that state. */
   private def artifactsBefore(spark: SparkSession, stateDir: String,
-                              maxExcl: Long): CurationArtifacts = {
-    def need(name: String, df: Option[DataFrame]): DataFrame =
-      df.getOrElse(throw new IllegalStateException(
+                              maxExcl: Long, smallV: Option[Long],
+                              labelmap: Option[DataFrame]
+                             ): CurationArtifacts = {
+    def need[A](name: String, a: Option[A]): A =
+      a.getOrElse(throw new IllegalStateException(
         s"BucketedCuration: no committed $name state below batch " +
           s"$maxExcl in $stateDir — run bootstrap() before streaming"))
-    val rows = need("clusters",
-      bucketStateBefore(spark, s"$stateDir/clusters", maxExcl)).drop("del")
-    // terminal labels: stored labels are as-of-insert; the composed map
-    // forwards every since-merged label in one (broadcast) hop
-    val clusters = tableBefore(spark, s"$stateDir/labelmap", maxExcl) match {
-      case None => rows
-      case Some(lm) =>
-        rows.join(broadcast(lm), rows("cluster_id") === lm("from_lbl"),
-            "left")
-          .select(rows("doc_id"),
-            coalesce(lm("to_lbl"), rows("cluster_id")).as("cluster_id"))
-    }
-    // small/ versions are multi-table dirs: resolve the version number,
-    // then read the member tables
-    val smallV = VersionedState.versions(spark, s"$stateDir/small")
-      .find(_ < maxExcl).getOrElse(throw new IllegalStateException(
-        s"BucketedCuration: no committed small-artifact state below " +
-          s"batch $maxExcl in $stateDir — run bootstrap() before streaming"))
-    val sd = s"$stateDir/small/v$smallV"
+    def buckets(store: String): DataFrame =
+      need(store,
+        BucketedState.stateBefore(spark, s"$stateDir/$store", maxExcl))
+    val clusters = BucketedState.forwardLabels(
+      buckets("clusters").drop("del"), labelmap)
+    val sd = s"$stateDir/small/v${need("small-artifact", smallV)}"
     val f = VersionedState.fs(spark, stateDir)
     def opt(name: String): Option[DataFrame] =
       if (f.exists(new Path(s"$sd/$name"))) Some(spark.read.parquet(s"$sd/$name"))
       else None
     CurationArtifacts(
-      hashReps = need("hashreps",
-        bucketStateBefore(spark, s"$stateDir/hashreps", maxExcl)),
-      signed = need("signed",
-        bucketStateBefore(spark, s"$stateDir/signed", maxExcl)).drop("del"),
+      hashReps = buckets("hashreps"),
+      signed = buckets("signed").drop("del"),
       clusters = clusters,
-      lineCensus = need("census",
-        bucketStateBefore(spark, s"$stateDir/census", maxExcl)),
+      lineCensus = buckets("census"),
       sourceCounts = opt("counts"),
       model = (spark.read.parquet(s"$sd/bigrams"),
         spark.read.parquet(s"$sd/unigrams")),
@@ -148,7 +127,7 @@ object BucketedCuration {
                             newSigned: DataFrame, freshRows: DataFrame,
                             censusDelta: DataFrame): Unit = {
     val reps = newMin.select(col("th"), col("new_min").as("rep_id"))
-    ensureTemplate(reps, s"$stateDir/hashreps")
+    BucketedState.ensureTemplate(reps, s"$stateDir/hashreps")
     BucketedState.mergeBatchWith(reps,
       batchId, s"$stateDir/hashreps", numBuckets, "th")(combineReps)
     val sT = newSigned.schema
@@ -157,7 +136,7 @@ object BucketedCuration {
         lit(null).cast(sT("sh").dataType).as("sh"),
         lit(null).cast(sT("bkeys").dataType).as("bkeys"),
         lit(true).as("del")))
-    ensureTemplate(signedSlice, s"$stateDir/signed")
+    BucketedState.ensureTemplate(signedSlice, s"$stateDir/signed")
     BucketedState.mergeBatchWith(signedSlice,
       batchId, s"$stateDir/signed", numBuckets, "doc_id")(combineWithDeletes)
     val cT = freshRows.schema
@@ -165,30 +144,16 @@ object BucketedCuration {
       .unionByName(demoted.select(col("doc_id"),
         lit(null).cast(cT("cluster_id").dataType).as("cluster_id"),
         lit(true).as("del")))
-    ensureTemplate(clusterSlice, s"$stateDir/clusters")
+    BucketedState.ensureTemplate(clusterSlice, s"$stateDir/clusters")
     BucketedState.mergeBatchWith(clusterSlice,
       batchId, s"$stateDir/clusters", numBuckets, "doc_id")(combineWithDeletes)
-    ensureTemplate(censusDelta, s"$stateDir/census")
+    BucketedState.ensureTemplate(censusDelta, s"$stateDir/census")
     BucketedState.mergeBatchWith(censusDelta, batchId,
       s"$stateDir/census", numBuckets, "lh")(combineCensus)
   }
 
-  private def writeSmall(spark: SparkSession, stateDir: String,
-                         batchId: Long, art: CurationArtifacts,
-                         smallVs: Seq[Long]): Unit = {
-    val sd = s"$stateDir/small/v$batchId"
-    // the one shared layout definition (Curation.writeArtifacts' small
-    // half) — the whole-table and bucketed stores cannot diverge
-    Curation.writeSmallArtifacts(art, sd)
-    // marker LAST: the small version is the batch's commit signal, so
-    // every other write of the batch (buckets, labelmap, kept slice)
-    // must already be on storage when it lands
-    VersionedState.commitMarker(spark, sd)
-    VersionedState.gcBefore(spark, s"$stateDir/small", batchId, smallVs)
-  }
-
-  /** Seed all stores from the bootstrap corpus (version -1, the
-    * [[StreamingCuration.bootstrap]] convention). */
+  /** Seed all stores from the bootstrap corpus (version -1: batch 0
+    * merges against it). */
   def bootstrap(docs: DataFrame, stateDir: String, numBuckets: Int = 64,
                 idCol: String = "doc_id", textCol: String = "text",
                 sourceCol: Option[String] = None,
@@ -197,24 +162,25 @@ object BucketedCuration {
                 trainQuality: Boolean = false): Unit =
     graft.CacheBarriers.withScope {
       val spark = docs.sparkSession
-      val (kept, art) = Curation.artifactsOf(docs, idCol, textCol,
-        sourceCol, lineMinChars, classifier, trainQuality)
-      // the bootstrap is "everything is a delta": adds only, no map
-      writeBucketed(stateDir, -1L, numBuckets,
-        newMin = art.hashReps.select(col("th"),
-          col("rep_id").as("new_min")),
-        demoted = art.signed.select("doc_id").limit(0),
-        newSigned = art.signed,
-        freshRows = art.clusters,
-        censusDelta = art.lineCensus)
-      art.clusters
-        .select(col("doc_id").as("from_lbl"), col("cluster_id").as("to_lbl"))
-        .limit(0)
-        .write.mode("overwrite").parquet(s"$stateDir/labelmap/v-1")
-      // kept BEFORE the small marker: the marker is the commit signal
-      kept.write.mode("overwrite").parquet(s"$stateDir/kept/b-1")
-      writeSmall(spark, stateDir, -1L, art,
-        VersionedState.versions(spark, s"$stateDir/small"))
+      VersionedState.advanceDir(spark, s"$stateDir/small", -1L) { (_, sd) =>
+        val (kept, art) = Curation.artifactsOf(docs, idCol, textCol,
+          sourceCol, lineMinChars, classifier, trainQuality)
+        VersionedState.advance(spark, s"$stateDir/labelmap", -1L) { _ =>
+          // the bootstrap is "everything is a delta": adds only
+          writeBucketed(stateDir, -1L, numBuckets,
+            newMin = art.hashReps.select(col("th"),
+              col("rep_id").as("new_min")),
+            demoted = art.signed.select("doc_id").limit(0),
+            newSigned = art.signed,
+            freshRows = art.clusters,
+            censusDelta = art.lineCensus)
+          // ... and forwards no label
+          art.clusters.select(col("doc_id").as("from_lbl"),
+            col("cluster_id").as("to_lbl")).limit(0)
+        }
+        kept.write.mode("overwrite").parquet(s"$stateDir/kept/b-1")
+        Curation.writeSmallArtifacts(art, sd)
+      }
     }
 
   /** Idempotent curation of one micro-batch: deltas are computed against
@@ -228,44 +194,28 @@ object BucketedCuration {
                  classifier: Option[QualityModel.LocalClassifier] = None): Unit =
     graft.CacheBarriers.withScope {
       val spark = batch.sparkSession
-      // the stale-checkpoint guard at the whole-state level rides the
-      // small/ chain (every committed batch has a version there); the
-      // per-bucket chains re-guard themselves inside mergeBatchWith
-      val smallVs = VersionedState.versions(spark, s"$stateDir/small")
-      VersionedState.requireNoNewerThan(smallVs, s"$stateDir/small", batchId)
-      val art = artifactsBefore(spark, stateDir, batchId)
-      val (kept, art2, d) = Curation.curateIncrementalFull(batch, art,
-        idCol, textCol, sourceCol, lineMinChars, classifier)
-      writeBucketed(stateDir, batchId, numBuckets,
-        d.newMin, d.demoted, d.newSigned, d.freshRows,
-        Dedup.lineCensus(batch, idCol, textCol, lineMinChars))
-      // labelmap: compose so every entry still points at its TERMINAL
-      // label (the batch's relabels' domain — terminal labels until now —
-      // is disjoint from the map's domain, so the union stays a function)
-      val lmDir = s"$stateDir/labelmap"
-      val lmVs = VersionedState.versions(spark, lmDir)
-      VersionedState.requireNoNewerThan(lmVs, lmDir, batchId)
-      val lm = tableBefore(spark, lmDir, batchId) match {
-        case None => d.relabels
-        case Some(old) =>
-          val r = d.relabels.select(col("from_lbl").as("r_from"),
-            col("to_lbl").as("r_to"))
-          old.join(broadcast(r), old("to_lbl") === col("r_from"), "left")
-            .select(old("from_lbl"),
-              coalesce(col("r_to"), old("to_lbl")).as("to_lbl"))
-            .unionByName(d.relabels)
+      val (smallDir, lmDir) = (s"$stateDir/small", s"$stateDir/labelmap")
+      VersionedState.advanceDir(spark, smallDir, batchId) { (smallV, sd) =>
+        // the batch's outputs, computed inside the labelmap fold (they
+        // need its predecessor) and written after its commit
+        var outputs: Option[(DataFrame, CurationArtifacts)] = None
+        VersionedState.advance(spark, lmDir, batchId) { labelmap =>
+          val art = artifactsBefore(spark, stateDir, batchId, smallV,
+            labelmap)
+          val (kept, art2, d) = Curation.curateIncrementalFull(batch, art,
+            idCol, textCol, sourceCol, lineMinChars, classifier)
+          writeBucketed(stateDir, batchId, numBuckets,
+            d.newMin, d.demoted, d.newSigned, d.freshRows,
+            Dedup.lineCensus(batch, idCol, textCol, lineMinChars))
+          outputs = Some((kept, art2))
+          BucketedState.composeLabels(labelmap, d.relabels)
+        }
+        val (kept, art2) = outputs.get
+        kept.write.mode("overwrite").parquet(s"$stateDir/kept/b$batchId")
+        // small artifacts roll forward whole (census-sized); the marker
+        // advanceDir writes after them commits the batch
+        Curation.writeSmallArtifacts(art2, sd)
       }
-      lm.write.mode("overwrite").parquet(s"$lmDir/v$batchId")
-      VersionedState.gcBefore(spark, lmDir, batchId, lmVs)
-      // kept BEFORE the small marker (same ordering as
-      // [[StreamingCuration.mergeBatch]]): a crash between the two
-      // leaves the batch uncommitted and the replay rewrites the kept
-      // slice deterministically — never a committed batch with a
-      // missing output slice
-      kept.write.mode("overwrite").parquet(s"$stateDir/kept/b$batchId")
-      // small artifacts roll forward whole (census-sized); their marker
-      // commits the batch
-      writeSmall(spark, stateDir, batchId, art2, smallVs)
     }
 
   /** Continuous form: document stream → per-batch bucketed merges. */
@@ -291,11 +241,11 @@ object BucketedCuration {
   def latestArtifacts(spark: SparkSession,
                       stateDir: String): Option[CurationArtifacts] =
     VersionedState.versions(spark, s"$stateDir/small").headOption
-      .map(v => artifactsBefore(spark, stateDir, v + 1))
+      .map(v => artifactsBefore(spark, stateDir, v + 1, Some(v),
+        VersionedState.tableBefore(spark, s"$stateDir/labelmap", v + 1)))
 
-  /** The accumulated kept corpus (union of every batch's kept slice,
-    * bootstrap included) — same contract as
-    * [[StreamingCuration.keptCorpus]]. */
+  /** The accumulated kept corpus: the union of every batch's kept slice,
+    * bootstrap included. */
   def keptCorpus(spark: SparkSession, stateDir: String): DataFrame =
     spark.read.parquet(s"$stateDir/kept/b*")
 }

@@ -128,23 +128,9 @@ object BucketedState {
       try {
         val merges = touched.toSeq.map { b =>
           Future {
-            // same stale-checkpoint guard as StreamingUpsert.mergeBatch: a
-            // fresh checkpoint restarting batch ids under an existing chain
-            // would write b<N>/v0 beneath a committed v5 — readers still
-            // see v5 and the new merges become silently invisible.
-            // ONE listing per bucket per batch, threaded through guard,
-            // predecessor lookup, and GC
-            val bDir = s"$stateDir/b$b"
-            val vs = VersionedState.versions(spark, bDir)
-            VersionedState.requireNoNewerThan(vs, bDir, batchId)
             val slice = bucketed.filter(col("__bucket") === b).drop("__bucket")
-            val prev = vs.find(_ < batchId)
-              .map(v => spark.read.parquet(s"$bDir/v$v"))
-            val merged = combine(
-              prev.map(_.unionByName(slice)).getOrElse(slice))
-            merged.write.mode("overwrite").parquet(s"$bDir/v$batchId")
-            // GC: keep this version + predecessor (crash-recovery window)
-            VersionedState.gcBefore(spark, bDir, batchId, vs)
+            VersionedState.advance(spark, s"$stateDir/b$b", batchId)(prev =>
+              combine(prev.fold(slice)(_.unionByName(slice))))
           }
         }
         Await.result(Future.sequence(merges), Duration.Inf)
@@ -264,6 +250,35 @@ object BucketedState {
           Some(spark.read.parquet(s"$dir/_schema"))
         else None
       }
+
+  /** Label forwarding, the one rule both bucketed cluster stores
+    * ([[BucketedCuration]], [[BucketedSemanticDedup]]) share: bucket rows
+    * keep the label AS OF their insert batch, and a small `labelmap/`
+    * chain (from_lbl, to_lbl) maps every since-merged label straight to
+    * its TERMINAL label, so reading (doc_id, cluster_id) rows is one
+    * broadcast hop. */
+  private[streaming] def forwardLabels(rows: DataFrame,
+                                       labelmap: Option[DataFrame]): DataFrame =
+    labelmap.fold(rows) { lm =>
+      rows.join(broadcast(lm), rows("cluster_id") === lm("from_lbl"), "left")
+        .select(rows("doc_id"),
+          coalesce(lm("to_lbl"), rows("cluster_id")).as("cluster_id"))
+    }
+
+  /** The map after a batch: old entries re-pointed through the batch's
+    * `relabels`, plus the relabels themselves. The relabels' domain
+    * (labels terminal until now) is disjoint from the map's domain, so
+    * the union stays a function onto terminal labels. */
+  private[streaming] def composeLabels(labelmap: Option[DataFrame],
+                                       relabels: DataFrame): DataFrame =
+    labelmap.fold(relabels) { old =>
+      val r = relabels.select(col("from_lbl").as("r_from"),
+        col("to_lbl").as("r_to"))
+      old.join(broadcast(r), old("to_lbl") === col("r_from"), "left")
+        .select(old("from_lbl"),
+          coalesce(col("r_to"), old("to_lbl")).as("to_lbl"))
+        .unionByName(relabels)
+    }
 
   /** Persist the store's row schema once (an empty parquet table) so an
     * empty store reads as an empty TYPED frame. Overwrite-on-missing

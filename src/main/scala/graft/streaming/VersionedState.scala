@@ -18,8 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    replay-safe under at-least-once delivery.
   *  - GUARD: committed versions NEWER than the batch mean the dir belongs
   *    to a further-progressed checkpoint; merging would stay invisible to
-  *    readers until the batch ids caught up, so it fails loudly
-  *    ([[requireNoNewerThan]]). Seeing its own version is fine.
+  *    readers until the batch ids caught up, so it fails loudly. Seeing
+  *    its own version is fine.
   *  - GC: after the write, everything older than the predecessor is
   *    deleted — this version plus its predecessor are the crash window.
   *    A callback reading a committed version must materialize it before
@@ -33,9 +33,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * inside the fold, before the commit: a failed sink replays the batch
   * rather than committing state for rows never delivered.
   *
-  * [[BucketedState]] runs the same protocol per bucket; the multi-table
-  * curation stores use [[requireNoNewerThan]] / [[gcBefore]] directly
-  * and commit their dir-level marker with [[commitMarker]].
+  * [[BucketedState]] runs [[advance]] per bucket. A version that holds
+  * several tables (the curation stores' `small/` chain) commits through
+  * [[advanceDir]]: the same guard, predecessor and GC around a caller's
+  * multi-table write, with the dir-level `_SUCCESS` marker written LAST.
   */
 private[streaming] object VersionedState {
 
@@ -43,16 +44,6 @@ private[streaming] object VersionedState {
 
   def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Write the `_SUCCESS` commit marker for a MULTI-TABLE version dir —
-    * one whose member tables each job-committed individually, so the
-    * dir-level marker (what [[versions]] keys off) must be written
-    * explicitly, LAST. Single-table versions get theirs from the parquet
-    * job commit and never need this. */
-  def commitMarker(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir, "_SUCCESS")
-    fs(spark, dir).create(p, true).close()
-  }
 
   /** Committed versions under `dir`, newest first. */
   def versions(spark: SparkSession, dir: String): Seq[Long] = {
@@ -82,16 +73,37 @@ private[streaming] object VersionedState {
     * guard, the predecessor read and the GC: on object stores the
     * listings, not the fold, dominate small batches. */
   def advance(spark: SparkSession, dir: String, batchId: Long)
-             (next: Option[DataFrame] => DataFrame): Unit = {
+             (next: Option[DataFrame] => DataFrame): Unit =
+    commit(spark, dir, batchId) { vs =>
+      next(read(spark, dir, vs, batchId))
+        .write.mode("overwrite").parquet(s"$dir/v$batchId")
+    }
+
+  /** Commit a MULTI-TABLE `v<batchId>`: `write(predecessor version,
+    * version dir)` lays down the member tables (each job-commits on its
+    * own), then the dir-level `_SUCCESS` marker [[versions]] keys off is
+    * written LAST, so a crash anywhere in `write` leaves the version
+    * invisible and the replay rewrites it. */
+  def advanceDir(spark: SparkSession, dir: String, batchId: Long)
+                (write: (Option[Long], String) => Unit): Unit =
+    commit(spark, dir, batchId) { vs =>
+      val out = s"$dir/v$batchId"
+      write(vs.find(_ < batchId), out)
+      fs(spark, out).create(new Path(out, "_SUCCESS"), true).close()
+    }
+
+  /** guard → `write(listing)` → GC, over ONE listing taken this batch. */
+  private def commit(spark: SparkSession, dir: String, batchId: Long)
+                    (write: Seq[Long] => Unit): Unit = {
     val vs = versions(spark, dir)
     requireNoNewerThan(vs, dir, batchId)
-    next(read(spark, dir, vs, batchId))
-      .write.mode("overwrite").parquet(s"$dir/v$batchId")
+    write(vs)
     gcBefore(spark, dir, batchId, vs)
   }
 
-  /** The stale-checkpoint guard over a listing taken this batch. */
-  def requireNoNewerThan(vs: Seq[Long], dir: String, batchId: Long): Unit = {
+  /** The stale-checkpoint guard. */
+  private def requireNoNewerThan(vs: Seq[Long], dir: String,
+                                 batchId: Long): Unit = {
     val newer = vs.filter(_ > batchId)
     require(newer.isEmpty,
       s"state dir $dir already holds committed versions ${newer.mkString(",")} " +
@@ -102,8 +114,8 @@ private[streaming] object VersionedState {
   /** GC: keep the newest version strictly below `batchId` and delete
     * everything older. Targets are strictly below `batchId`, so a listing
     * taken before this batch's own write is exactly the candidate set. */
-  def gcBefore(spark: SparkSession, dir: String, batchId: Long,
-               vs: Seq[Long]): Unit = {
+  private def gcBefore(spark: SparkSession, dir: String, batchId: Long,
+                       vs: Seq[Long]): Unit = {
     val f = fs(spark, dir)
     vs.filter(_ < batchId).drop(1)
       .foreach(v => f.delete(new Path(s"$dir/v$v"), true))

@@ -15,8 +15,7 @@ import graft.streaming.{BucketedCuration, BucketedState}
 /** The bucketed form of streaming curation: per-batch merges must touch
   * ONLY the buckets the batch's deltas hash into (the 100 TB claim —
   * no whole-artifact rewrite), while the assembled artifact view and
-  * the kept slices stay exactly what the whole-table twin and a full
-  * rebuild produce. */
+  * the kept slices stay exactly what a full rebuild produces. */
 class BucketedCurationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -170,6 +169,27 @@ class BucketedCurationSpec extends AnyFunSuite {
     val left = sc.getRDDStorageInfo.filterNot(r => before(r.id))
     assert(left.isEmpty, s"blocks left: ${left.mkString(", ")}")
     assert(CacheBarriers.releaseAll() == 0)
+  }
+
+  test("an increment never re-reads the bootstrap corpus (black-box)") {
+    // bootstrap from parquet on disk, then DELETE the source files: if
+    // any stage of the incremental path touched the old corpus instead
+    // of the artifacts, the merge would crash on the missing files
+    val srcDir = Files.createTempDirectory("graft-bcur-src").toString
+    val stateDir = Files.createTempDirectory("graft-bcur6").toString
+    df(b1).write.mode("overwrite").parquet(srcDir)
+    BucketedCuration.bootstrap(spark.read.parquet(srcDir), stateDir,
+      NumBuckets, sourceCol = Some("source"))
+    val walk = Files.walk(java.nio.file.Paths.get(srcDir))
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    finally walk.close()
+    BucketedCuration.mergeBatch(df(b2), 0L, stateDir, NumBuckets,
+      sourceCol = Some("source"))
+    assert(keptSet(BucketedCuration.keptCorpus(spark, stateDir))
+      .contains(102L))
+    val art = BucketedCuration.latestArtifacts(spark, stateDir).get
+    assert(art.lineCensus.count() > 0)
   }
 
   test("merging without bootstrap fails loudly") {

@@ -126,6 +126,35 @@ class BucketedSemanticDedupSpec extends AnyFunSuite {
     assert(ids.toSet == Set(1L, 2L, 3L, 4L, 10L, 11L))
   }
 
+  test("a stale batch id fails further-progressed and writes nothing") {
+    import spark.implicits._
+    val stateDir = Files.createTempDirectory("graft-bsd-state5").toString
+    BucketedSemanticDedup.bootstrap(b1, stateDir,
+      centroidPred = col("vec_id") === 1L, minCos, NumBuckets)
+    BucketedSemanticDedup.mergeBatch(batch2.toDF("vec_id", "embedding"),
+      0L, stateDir, minCos, NumBuckets)
+    BucketedSemanticDedup.mergeBatch(batch3.toDF("vec_id", "embedding"),
+      2L, stateDir, minCos, NumBuckets)
+    def manifestRows() =
+      spark.read.parquet(s"$stateDir/index/_ids").count()
+    def decisionDirs() = {
+      val s = Files.list(java.nio.file.Paths.get(s"$stateDir/decisions"))
+      try s.iterator().asScala.map(_.getFileName.toString).toSet
+      finally s.close()
+    }
+    val (ids, decs) = (manifestRows(), decisionDirs())
+    // batch 1 under a chain already committed at batch 2 (a checkpoint
+    // restored behind its state): refused before the decisions write or
+    // the index append, which would admit vector 20
+    val e = intercept[IllegalArgumentException](
+      BucketedSemanticDedup.mergeBatch(
+        Seq((20L, vec(7 * theta))).toDF("vec_id", "embedding"),
+        1L, stateDir, minCos, NumBuckets))
+    assert(e.getMessage.contains("further-progressed"))
+    assert(manifestRows() == ids)
+    assert(decisionDirs() == decs)
+  }
+
   test("a replayed micro-batch converges to the same state") {
     import spark.implicits._
     val stateDir = Files.createTempDirectory("graft-bsd-state3").toString

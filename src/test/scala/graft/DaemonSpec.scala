@@ -34,6 +34,20 @@ class DaemonSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Daemon.parseArgs(Array("a", "b", "c", "--port"))
     }
+    // a zero or negative cadence is refused by name, not busy-spun
+    for (v <- Seq("0", "-5")) {
+      val e = intercept[IllegalArgumentException](
+        Daemon.parseArgs(Array("a", "b", "c", "--interval", v)))
+      assert(e.getMessage.contains("--interval"))
+    }
+    // a non-numeric value names its flag
+    for (k <- Seq("--port", "--interval", "--maxDocs")) {
+      val e = intercept[IllegalArgumentException](
+        Daemon.parseArgs(Array("a", "b", "c", k, "ten")))
+      assert(e.getMessage.contains(k))
+    }
+    assert(Daemon.parseArgs(Array("a", "b", "c", "--interval", "1"))
+      .intervalSec == 1L)
   }
 
   test("--pipeline curation + --sink fails loudly at startup") {

@@ -85,4 +85,34 @@ class VersionedStateSpec extends AnyFunSuite {
     count(dir, 2L)
     assert(value(VersionedState.tableBefore(spark, dir, Long.MaxValue)) == 3L)
   }
+
+  test("advanceDir: a failing write leaves the version uncommitted") {
+    val dir = tmp("dir-fail")
+    VersionedState.advanceDir(spark, dir, 0L) { (_, out) =>
+      Seq(1L).toDF("n").write.parquet(s"$out/a")
+    }
+    intercept[IllegalStateException] {
+      VersionedState.advanceDir(spark, dir, 1L) { (prev, out) =>
+        assert(prev.contains(0L))
+        // one member table landed, then the body died
+        Seq(2L).toDF("n").write.parquet(s"$out/a")
+        throw new IllegalStateException("crash mid-version")
+      }
+    }
+    assert(new File(s"$dir/v1/a/_SUCCESS").exists())
+    assert(!new File(s"$dir/v1/_SUCCESS").exists())
+    assert(VersionedState.versions(spark, dir) == Seq(0L))
+  }
+
+  test("advanceDir: the guard fires before write is called") {
+    val dir = tmp("dir-guard")
+    VersionedState.advanceDir(spark, dir, 2L)((_, _) => ())
+    var called = false
+    val e = intercept[IllegalArgumentException](
+      VersionedState.advanceDir(spark, dir, 1L)((_, _) => called = true))
+    assert(e.getMessage.contains("further-progressed"))
+    assert(!called)
+    assert(!new File(s"$dir/v1").exists())
+    assert(VersionedState.versions(spark, dir) == Seq(2L))
+  }
 }
